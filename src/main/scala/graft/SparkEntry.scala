@@ -986,19 +986,12 @@ object SparkEntry {
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
           "n_lines", "sum_qty")
     }),
-    "j6_not_in" -> ((s, d) => {
-      // via spark.sql so Catalyst plans the null-aware anti join that
-      // preserves SQL NOT IN semantics (SURVEY §2.3 J6); views are
-      // uniquely named and dropped post-analysis (no session-global state)
-      val (vo, vl) = (Views.unique("orders"), Views.unique("lineitem"))
-      rd(s, d, "orders").createOrReplaceTempView(vo)
-      rd(s, d, "lineitem").createOrReplaceTempView(vl)
-      val out = s.sql(s"SELECT o_orderkey, o_totalprice FROM $vo " +
-        s"WHERE o_orderkey NOT IN (SELECT l_orderkey FROM $vl)")
-      s.catalog.dropTempView(vo)
-      s.catalog.dropTempView(vl)
-      out
-    }),
+    "j6_not_in" -> ((s, d) =>
+      // an isin(Dataset) subquery: Catalyst plans the null-aware anti
+      // join that preserves SQL NOT IN semantics (SURVEY §2.3 J6)
+      rd(s, d, "orders")
+        .where(!col("o_orderkey").isin(rd(s, d, "lineitem").select("l_orderkey")))
+        .select("o_orderkey", "o_totalprice")),
     "j7_not_exists" -> ((s, d) =>
       rd(s, d, "customer")
         .join(

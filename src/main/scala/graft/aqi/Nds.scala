@@ -48,18 +48,17 @@ object Nds {
       orderBy: Seq[String],
       maxOverride: Option[Long] = None): DataFrame = {
     // materialize the merge output once: it is referenced three times
-    // below (max-key action, existing branch, inserted branch) and, in
-    // mergeCounties, again by the anti-join subqueries of the next
-    // insert step — without the barrier each action re-executes the
-    // whole upstream merge plan and Catalyst re-optimizes an ever-deeper
-    // nest (measured 4× slowdown on the county chain). The checkpoint is
-    // at most the merged table slice the caller is about to write anyway.
+    // below (the max/count aggregate, existing branch, inserted branch)
+    // — without the barrier each reference re-executes the whole
+    // upstream merge plan. The checkpoint is at most the merged table
+    // slice the caller is about to write anyway.
     val mat = df.localCheckpoint(true)
     val existing = mat.filter(col(skCol).isNotNull)
     val inserted = mat.filter(col(skCol).isNull)
-    val mx = maxOverride.getOrElse(
-      existing.agg(coalesce(max(col(skCol)), lit(0L))).collect()(0).getLong(0))
-    val insertedCnt = inserted.count() // cheap: `mat` is materialized
+    val stats = mat.agg(coalesce(max(col(skCol)), lit(0L)),
+      count(when(col(skCol).isNull, 1))).head()
+    val mx = maxOverride.getOrElse(stats.getLong(0))
+    val insertedCnt = stats.getLong(1)
     val keyed =
       if (insertedCnt <= SurrogateWindowMax)
         inserted.withColumn(skCol,
@@ -109,13 +108,17 @@ object Nds {
     *     with NULL-safe key equality (the reference's `filter_by(None)`
     *     emits IS NULL, so NULL matches NULL); matched rows refresh only
     *     county_name + last_updated_nds.
-    *  2. J6: INSERT of AQI counties whose name is absent from county_nds
-    *     — executed through the SQL parser as NOT IN so Catalyst plans
-    *     the null-aware anti join with exact SQL NOT IN semantics
-    *     (global across states — the very bug the Windham patch fixes).
+    *  2. J6: INSERT of AQI counties whose name is absent from step 1's
+    *     output — an `isin(Dataset)` subquery, which Catalyst plans as
+    *     the null-aware anti join with exact SQL NOT IN semantics (one
+    *     NULL county name suppresses every insert; the test is global
+    *     across states — the very bug the Windham patch fixes).
     *  3. J7: the Windham patch — NOT EXISTS on (state_name, county_name)
-    *     against the counties stage, inserted after (and thus aware of)
-    *     step 2's rows. Order is behavior: replicated sequentially.
+    *     against the counties stage. It reads neither step's output, so
+    *     a row may be inserted by both J6 and J7, as in the reference.
+    * New rows get dense keys in one pass, ordered by step first: the
+    * reference runs the steps in sequence, so every step-2 key is below
+    * every step-3 key whatever the names. `spark` is unused.
     */
   def mergeCounties(
       spark: SparkSession,
@@ -132,65 +135,35 @@ object Nds {
         Seq("state_name"), "inner")
       .withColumn("source_id", lit(1))
       .drop("state_name")
-    val merged0 = Merge.scd1(countyNds, source,
+    val merged = Merge.scd1(countyNds, source,
       MergeSpec(Seq("county_fips"), Seq("county_name"), nullSafeKeys = true,
         createdCol = Some("created_date_nds"),
         updatedCol = Some("last_updated_nds")),
       now)
-    val merged = fillSurrogate(merged0, "county_id_sk", Seq("county_name", "county_fips"))
 
-    // J6: NOT IN insert (null-aware anti join via the SQL parser).
-    // Views are uniquely named and dropped after analysis so two
-    // pipelines on one session never collide on catalog state.
-    val vAqi = graft.Views.unique("state_aqi_stage")
-    val vState = graft.Views.unique("state_nds")
-    val vCounty = graft.Views.unique("county_nds")
-    val vCountiesStage = graft.Views.unique("us_counties_stage")
-    aqiStage.createOrReplaceTempView(vAqi)
-    stateNds.createOrReplaceTempView(vState)
-    merged.createOrReplaceTempView(vCounty)
-    countiesStage.createOrReplaceTempView(vCountiesStage)
-    val insert1 = spark.sql(
-      s"""SELECT DISTINCT s1.county_name, s2.state_id_sk
-         |FROM $vAqi s1
-         |JOIN $vState s2 ON s1.state_name = s2.state_name
-         |WHERE s1.county_name NOT IN (SELECT county_name FROM $vCounty)""".stripMargin)
-      .withColumn("created_date_nds", now)
-      .withColumn("last_updated_nds", now)
-      .withColumn("source_id", lit(1))
-    val afterInsert1 = fillSurrogate(
-      merged.unionByName(insert1, allowMissingColumns = true),
-      "county_id_sk", Seq("county_name", "state_id_sk"))
-
-    // J7: Windham patch — NOT EXISTS on the 2-col natural key, aware of
-    // step 2's rows via the refreshed county view
-    afterInsert1.createOrReplaceTempView(vCounty)
-    val insert2 = spark.sql(
-      s"""SELECT DISTINCT s1.county_name, s2.state_id_sk
-         |FROM $vAqi s1
-         |JOIN $vState s2 ON s1.state_name = s2.state_name
-         |WHERE s1.county_name = 'Windham' AND NOT EXISTS (
-         |  SELECT 1 FROM $vCountiesStage ucs
-         |  WHERE ucs.state_name = s1.state_name AND ucs.county_name = s1.county_name
-         |)""".stripMargin)
-      .withColumn("created_date_nds", now)
-      .withColumn("last_updated_nds", now)
-      .withColumn("source_id", lit(1))
-    Seq(vAqi, vState, vCounty, vCountiesStage).foreach(spark.catalog.dropTempView)
+    val aqiCounties = aqiStage.as("s1")
+      .join(stateNds.as("s2"), col("s1.state_name") === col("s2.state_name"))
+    def insert(phase: Int, where: Column): DataFrame =
+      aqiCounties.where(where)
+        .select(col("s1.county_name"), col("s2.state_id_sk"))
+        .distinct()
+        .withColumn("created_date_nds", now)
+        .withColumn("last_updated_nds", now)
+        .withColumn("source_id", lit(1))
+        .withColumn("__phase", lit(phase))
+    val j6 = insert(1, !col("s1.county_name").isin(merged.select("county_name")))
+    val j7 = insert(2, col("s1.county_name") === "Windham" && !countiesStage
+      .where(col("state_name") === col("s1.state_name").outer() &&
+        col("county_name") === col("s1.county_name").outer())
+      .exists())
     fillSurrogate(
-      afterInsert1.unionByName(insert2, allowMissingColumns = true),
-      "county_id_sk", Seq("county_name", "state_id_sk"))
+      merged.withColumn("__phase", lit(0))
+        .unionByName(j6, allowMissingColumns = true)
+        .unionByName(j7, allowMissingColumns = true),
+      "county_id_sk", Seq("__phase", "county_name", "county_fips", "state_id_sk"))
       .select(Schemas.countyNds.fieldNames.map(col): _*)
   }
 
-  /** U3 (`stage_to_nds.py:141-218`): dims flatten (J3) → measurements ⋈
-    * dims on the composite natural key (J4) → keep-first dedup on the
-    * business key (A6; deterministic survivor = smallest (created,
-    * last_updated, county_id_sk, aqi_value)) → SCD-1 merge on
-    * (measured_date, defining_site, defining_parameter). Matched rows
-    * refresh aqi_value/aqi_category and stamp BOTH last_updated_nds and
-    * last_updated with `now` (reference quirk, `:149-153`).
-    */
   /** The measurement merge source: dims flatten (J3) → measurements ⋈
     * dims on the composite natural key (J4) → keep-first dedup on the
     * business key (A6; deterministic survivor).
@@ -224,6 +197,13 @@ object Nds {
     updatedCol = Some("last_updated_nds"),
     touchCols = Seq("last_updated"))
 
+  /** U3 (`stage_to_nds.py:141-218`): [[measurementSource]] (deterministic
+    * survivor = smallest (created, last_updated, county_id_sk,
+    * aqi_value)) → SCD-1 merge on (measured_date, defining_site,
+    * defining_parameter). Matched rows refresh aqi_value/aqi_category and
+    * stamp BOTH last_updated_nds and last_updated with `now` (reference
+    * quirk, `:149-153`).
+    */
   def mergeMeasurements(
       measurementNds: DataFrame,
       stateNds: DataFrame,

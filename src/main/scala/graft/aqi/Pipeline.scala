@@ -30,21 +30,13 @@ object Pipeline {
   val CountyNdsT = "county_nds"
   val MeasurementNdsT = "measurement_nds"
 
-  /** @param partitionedFacts when true, measurement_nds is stored
+  /** One DAG run at `now`.
+    *
+    * @param partitionedFacts when true, measurement_nds is stored
     *   date-partitioned and merged partition-scoped
     *   ([[Nds.mergeMeasurementsPartitioned]]) — the 100 TB fact path.
     *   Default keeps the flat layout (reference-scale).
     */
-  // coarse per-stage wall-clock logging, for throughput investigation:
-  // opt-in via SPARK_GRAFT_TIMING=1 (stderr, not part of any contract)
-  private def staged[T](tag: String)(f: => T): T =
-    if (!sys.env.contains("SPARK_GRAFT_TIMING")) f
-    else {
-      val t = System.nanoTime(); val r = f
-      System.err.println(f"[pipeline] $tag: ${(System.nanoTime() - t) / 1e9}%.2f s")
-      r
-    }
-
   def run(
       spark: SparkSession,
       sourceDir: String,
@@ -57,49 +49,37 @@ object Pipeline {
     // —— source→stage: AQI (windowed, watermarked) ——
     Watermarks.setCet(spark, warehouseDir, StateAqiStage, ts)
     val (cet, lset) = Watermarks.getWindow(spark, warehouseDir, StateAqiStage)
-    staged("stage aqi") {
-      val aqiStaged = Staging.stageAqi(spark, sourceDir, lset, cet)
-      Warehouse.overwrite(aqiStaged, warehouseDir, StateAqiStage) // S8 truncate+reload
-    }
+    Warehouse.overwrite(Staging.stageAqi(spark, sourceDir, lset, cet),
+      warehouseDir, StateAqiStage) // S8 truncate+reload
     Watermarks.setLset(spark, warehouseDir, StateAqiStage, ts) // only after success
 
     // —— source→stage: counties (full reload) ——
-    staged("stage counties") {
-      Warehouse.overwrite(Staging.stageCounties(spark, sourceDir), warehouseDir, UsCountiesStage)
-    }
+    Warehouse.overwrite(Staging.stageCounties(spark, sourceDir), warehouseDir, UsCountiesStage)
 
     // —— stage→NDS (strict order: FK surrogate resolution) ——
     val aqiStage = Warehouse.read(spark, warehouseDir, StateAqiStage)
     val countiesStage = Warehouse.read(spark, warehouseDir, UsCountiesStage)
 
-    staged("merge states") {
-      val states = Nds.mergeStates(
-        Warehouse.readOrEmpty(spark, warehouseDir, StateNdsT, Schemas.stateNds),
-        countiesStage, aqiStage, nowCol)
-      Warehouse.overwrite(states, warehouseDir, StateNdsT)
-    }
+    val states = Nds.mergeStates(
+      Warehouse.readOrEmpty(spark, warehouseDir, StateNdsT, Schemas.stateNds),
+      countiesStage, aqiStage, nowCol)
+    Warehouse.overwrite(states, warehouseDir, StateNdsT)
 
     val stateNds = Warehouse.read(spark, warehouseDir, StateNdsT)
-    staged("merge counties") {
-      val counties = Nds.mergeCounties(spark,
-        Warehouse.readOrEmpty(spark, warehouseDir, CountyNdsT, Schemas.countyNds),
-        stateNds, countiesStage, aqiStage, nowCol)
-      Warehouse.overwrite(counties, warehouseDir, CountyNdsT)
-    }
+    val counties = Nds.mergeCounties(spark,
+      Warehouse.readOrEmpty(spark, warehouseDir, CountyNdsT, Schemas.countyNds),
+      stateNds, countiesStage, aqiStage, nowCol)
+    Warehouse.overwrite(counties, warehouseDir, CountyNdsT)
 
-    staged("merge measurements") {
-      if (partitionedFacts) {
-        Nds.mergeMeasurementsPartitioned(spark, warehouseDir, stateNds,
-          Warehouse.read(spark, warehouseDir, CountyNdsT), aqiStage, nowCol,
-          MeasurementNdsT)
-      } else {
-        val measurements = Nds.mergeMeasurements(
-          Warehouse.readOrEmpty(spark, warehouseDir, MeasurementNdsT, Schemas.measurementNds),
-          stateNds,
-          Warehouse.read(spark, warehouseDir, CountyNdsT),
-          aqiStage, nowCol)
-        Warehouse.overwrite(measurements, warehouseDir, MeasurementNdsT)
-      }
+    val countyNds = Warehouse.read(spark, warehouseDir, CountyNdsT)
+    if (partitionedFacts) {
+      Nds.mergeMeasurementsPartitioned(spark, warehouseDir, stateNds, countyNds,
+        aqiStage, nowCol, MeasurementNdsT)
+    } else {
+      val measurements = Nds.mergeMeasurements(
+        Warehouse.readOrEmpty(spark, warehouseDir, MeasurementNdsT, Schemas.measurementNds),
+        stateNds, countyNds, aqiStage, nowCol)
+      Warehouse.overwrite(measurements, warehouseDir, MeasurementNdsT)
     }
   }
 }

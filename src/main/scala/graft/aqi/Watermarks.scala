@@ -41,9 +41,9 @@ object Watermarks {
   private def setColumn(
       spark: SparkSession, dir: String, table: String,
       colName: String, value: Timestamp): Unit = {
-    val current = readAll(spark, dir)
-    val others = current.filter(col("table_name") =!= table).collect().toSeq
-    val existing = current.filter(col("table_name") === table).collect().headOption
+    val (mine, others) = readAll(spark, dir).collect().toSeq
+      .partition(_.getAs[String]("table_name") == table)
+    val existing = mine.headOption
     val updated = existing match {
       case Some(r) =>
         if (colName == "cet") Row(table, value, r.getAs[Timestamp]("lset"))

@@ -92,12 +92,6 @@ package object functions {
       mat.map(_.toIndexedSeq).toIndexedSeq,
       ColumnBridge.expression(div)))
 
-  /** Cosine similarity between two array<float> columns, computed in
-    * double precision.
-    */
-  def cosineSim(a: Column, b: Column): Column =
-    vec_dot(a, b) / sqrt(vec_dot(a, a) * vec_dot(b, b))
-
   /** 64-bit polynomial rolling hash of a string (graft.plans.RollingHash):
     * the cheap, composable fingerprint primitive for document dedup.
     */

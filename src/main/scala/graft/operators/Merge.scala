@@ -152,19 +152,6 @@ object Merge {
       source.join(target.select(keys.map(col): _*).distinct(), keys, "left_anti"),
       allowMissingColumns = true)
 
-  /** Dense, deterministic surrogate-key assignment for new dimension rows:
-    * existing max + row_number over a total order on the business key.
-    *
-    * Replaces the reference's Postgres sequences (`state_id_sk` etc.).
-    * NOTE: the global window is a single-partition sort — acceptable for
-    * dimension tables (≤ millions of rows); fact tables should key on the
-    * natural/business key instead.
-    */
-  def withSurrogate(newRows: DataFrame, skCol: String, maxExisting: Long, orderBy: Seq[String]): DataFrame =
-    newRows.withColumn(
-      skCol,
-      row_number().over(Window.orderBy(orderBy.map(col): _*)) + lit(maxExisting))
-
   /** Keyed table diff — change data capture between two snapshots:
     * emits one row per differing key with `change_type` of `inserted`
     * (key only in `next`), `deleted` (key only in `prev`), or

@@ -147,10 +147,14 @@ object Quantiles {
     * doubles and both engines compute identical rank positions (a
     * fraction like 0.1 can straddle a rounding boundary in p·n).
     *
-    * Shape at scale: one percentile aggregate (the only sort) produces
-    * nBins−1 cutoffs; the assignment is a broadcast of that 1-row
-    * table plus a codegen'd when-chain — the big table is scanned
-    * once, never shuffled.
+    * NULLs: like `percentile_disc`, the cutoffs ignore NULL values; NULL
+    * rows still pass through, with bin 0.
+    *
+    * Shape at scale: one combinable count aggregation (only distinct
+    * values cross the shuffle) plus a running sum over the distinct
+    * value domain (an unpartitioned, domain-sized window) produce the
+    * nBins−1 cutoffs; the assignment is a broadcast of that 1-row table
+    * plus a codegen'd when-chain over the rows.
     */
   def equiDepthBins(
       df: DataFrame,
@@ -168,7 +172,8 @@ object Quantiles {
     // float and matches percentile_disc bit-for-bit.
     val w = org.apache.spark.sql.expressions.Window.orderBy(valueCol)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val cum = df.groupBy(col(valueCol)).agg(count(lit(1)).as("__n"))
+    val cum = df.where(col(valueCol).isNotNull)
+      .groupBy(col(valueCol)).agg(count(lit(1)).as("__n"))
       .select(col(valueCol), sum(col("__n")).over(w).as("__cum"))
     val cutCols = (1 until nBins).map { i =>
       min(when(col("__cum") * nBins >= col("__total") * i, col(valueCol)))

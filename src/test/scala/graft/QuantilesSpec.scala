@@ -63,6 +63,13 @@ class QuantilesSpec extends AnyFunSuite with SparkTest {
     assert(out(76L) == 3 && out(100L) == 3)
     val occupancy = out.values.groupBy(identity).view.mapValues(_.size).toMap
     assert(occupancy == Map(0 -> 25, 1 -> 25, 2 -> 25, 3 -> 25))
+    // NULL values take no part in the cutoffs and land in bin 0
+    val withNulls = df.unionByName((101 to 150).map(i => (i.toLong, None: Option[Double]))
+      .toDF("id", "v"))
+    val outN = Quantiles.equiDepthBins(withNulls, "v", nBins = 4)
+      .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
+    assert(outN.filter(_._1 <= 100L) == out)
+    assert((101L to 150L).forall(outN(_) == 0))
   }
 
   test("equiDepthBins holds equal depth under heavy skew (uniform bins would not)") {

@@ -118,4 +118,75 @@ class AqiPipelineSpec extends AnyFunSuite with SparkTest {
     assert(hartford.getAs[java.sql.Timestamp]("created_date_nds") ==
       java.sql.Timestamp.from(now1))
   }
+
+  // —— second fixture: county-insert semantics the golden fixture cannot
+  // see. The dim holds two Connecticut counties; the AQI file names a
+  // county absent from it (J6 NOT-IN insert) whose name sorts AFTER
+  // "Windham", plus a Vermont Windham (J7 patch insert). ——
+
+  private val countiesHeader =
+    "county,county_ascii,county_full,county_fips,state_id,state_name,lat,lng,population"
+  private val ctDim = Seq(
+    "Windham,Windham,Windham County,09015,CT,Connecticut,41.83,-71.98,116418",
+    "Hartford,Hartford,Hartford County,09003,CT,Connecticut,41.81,-72.74,899498")
+  private val insertAqi = Seq(
+    aqiRow("Connecticut", "Windham", 9, 40, "site-ct", "2021-07-01"),
+    aqiRow("Connecticut", "Zeta", 9, 41, "site-zeta", "2021-07-01"), // J6
+    aqiRow("Vermont", "Windham", 50, 42, "site-vt", "2021-07-01")) // J7
+
+  private def writeInsertFixture(dir: Path, dim: Seq[String], aqi: Seq[String],
+      aqiFile: String = "10_state_aqi_2021.csv"): Unit = {
+    Files.writeString(dir.resolve("uscounties.csv"), (countiesHeader +: dim).mkString("\n"))
+    Files.writeString(dir.resolve(aqiFile), (aqiHeader +: aqi).mkString("\n"))
+  }
+
+  /** county_nds as (county_name, state_name) -> county_id_sk. */
+  private def countyKeys(wh: String): Map[(String, String), Long] = {
+    val states = Warehouse.read(spark, wh, Pipeline.StateNdsT)
+    Warehouse.read(spark, wh, Pipeline.CountyNdsT)
+      .join(states.select("state_id_sk", "state_name"), "state_id_sk")
+      .select("county_name", "state_name", "county_id_sk").collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+  }
+
+  test("a NULL county name in the dim suppresses every J6 NOT-IN insert") {
+    val src = Files.createTempDirectory("aqi-src-null")
+    val wh = Files.createTempDirectory("aqi-wh-null").toString
+    writeInsertFixture(src,
+      ctDim :+ ",,,09999,CT,Connecticut,41.50,-72.50,1", insertAqi)
+    Pipeline.run(spark, src.toString, wh, Instant.parse("2026-01-01T00:00:00Z"))
+    // NOT IN over a set holding NULL is never true: Zeta is not inserted,
+    // while the J7 NOT EXISTS patch still inserts the Vermont Windham
+    assert(countyKeys(wh).keySet == Set(("Windham", "Connecticut"), ("Hartford", "Connecticut"),
+      (null, "Connecticut"), ("Windham", "Vermont")))
+  }
+
+  test("J6 inserts are keyed before J7 inserts, whatever their names") {
+    val src = Files.createTempDirectory("aqi-src-order")
+    val wh = Files.createTempDirectory("aqi-wh-order").toString
+    writeInsertFixture(src, ctDim, insertAqi)
+    Pipeline.run(spark, src.toString, wh, Instant.parse("2026-01-01T00:00:00Z"))
+    // dim rows first in name order, then J6 (Zeta), then J7 (Windham/VT)
+    assert(countyKeys(wh) == Map(
+      ("Hartford", "Connecticut") -> 1L, ("Windham", "Connecticut") -> 2L,
+      ("Zeta", "Connecticut") -> 3L, ("Windham", "Vermont") -> 4L))
+  }
+
+  test("a second-day run keeps existing county keys and continues from the max") {
+    val src = Files.createTempDirectory("aqi-src-day2")
+    val wh = Files.createTempDirectory("aqi-wh-day2").toString
+    writeInsertFixture(src, ctDim, insertAqi)
+    Pipeline.run(spark, src.toString, wh, Instant.parse("2026-01-01T00:00:00Z"))
+    val day1 = countyKeys(wh)
+    // day 2: a new dim county and a new J6 county, both sorting before
+    // every existing name, inside the [day-1 run, day-2 run] window
+    writeInsertFixture(src,
+      ctDim :+ "Alameda,Alameda,Alameda County,09999,CT,Connecticut,41.50,-72.50,1",
+      Seq(aqiRow("Connecticut", "Aardvark", 9, 43, "site-aa", "2026-01-01")),
+      aqiFile = "10_state_aqi_2026.csv")
+    Pipeline.run(spark, src.toString, wh, Instant.parse("2026-01-02T00:00:00Z"))
+    val day2 = countyKeys(wh)
+    assert(day2 == day1 ++ Map(
+      ("Alameda", "Connecticut") -> 5L, ("Aardvark", "Connecticut") -> 6L))
+  }
 }
