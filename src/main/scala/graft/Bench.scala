@@ -1,11 +1,15 @@
 package graft
 
-import org.apache.spark.sql.Column
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{call_function, struct, xxhash64}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse}
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line with per-query seconds.
+  * prints a JSON line with per-query seconds, between two copies of a
+  * short summary line.
   *
   * One untimed warmup pass precedes two timed passes; each query reports
   * its faster pass. Warmup amortizes one-time costs a resident engine
@@ -22,46 +26,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * A query that throws is recorded in the `failures` JSON field with its
   * elapsed-time slot set to -1 — a regression can only lower the score,
-  * never masquerade as a fast success. The JSON line also lands in
-  * `SPARK_GRAFT_BENCH_OUT` (default `BENCH_LAST.json`) so the driver
-  * needn't parse it out of sbt's log prefixes.
+  * never masquerade as a fast success. The full JSON line also lands in
+  * `SPARK_GRAFT_BENCH_OUT` (default `BENCH_LAST.json`), where the next
+  * run reads its baselines.
   */
 object Bench {
 
-  /** Previous round's per-query seconds, parsed from the existing
-    * BENCH output file BEFORE this run overwrites it. The format is
-    * our own single JSON line; a flat regex over `"name":secs` pairs
-    * inside the `"queries"` object is exact for it (names are
-    * [a-z0-9_], values are non-negative or -1 at millisecond
-    * precision) — no JSON dependency needed.
+  /** The previous run's per-query seconds and control-set seconds
+    * ([[controlQueries]]), read BEFORE this run overwrites the file; an
+    * absent or unreadable file gives neither. The control seconds count
+    * ONLY when that run timed the SAME control set (`control_set`
+    * version match): a total over other queries would push the ratio
+    * arbitrarily far from 1.
     */
-  private def previousQueryTimes(path: String): Map[String, Double] =
+  private[graft] def previousRun(path: String): (Map[String, Double], Option[Double]) =
     try {
-      val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-      val qStart = txt.indexOf("\"queries\":{")
-      if (qStart < 0) Map.empty
-      else {
-        val body = txt.substring(qStart + 11, txt.indexOf('}', qStart))
-        """"([a-z0-9_]+)":(-?[0-9.]+)""".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case _: Throwable => Map.empty }
-
-  /** The prior run's recorded control-set seconds ([[controlQueries]]) —
-    * comparable ONLY when the prior run timed the SAME control set
-    * (`control_set` version match): a prior total over a different set
-    * of queries would push the ratio arbitrarily far from 1. None on
-    * pre-control or different-set output files.
-    */
-  private def previousControlSec(path: String): Option[Double] =
-    try {
-      val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-      val sameSet = """"control_set":([0-9]+)""".r.findFirstMatchIn(txt)
-        .exists(_.group(1).toInt == controlSetVersion)
-      if (!sameSet) None
-      else """"control_sec":(-?[0-9.]+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toDouble).filter(_ > 0)
-    } catch { case _: Throwable => None }
+      implicit val formats: Formats = DefaultFormats
+      val prev = parse(Files.readString(Paths.get(path)))
+      val controlSec =
+        if ((prev \ "control_set") != JInt(controlSetVersion)) None
+        else (prev \ "control_sec").extractOpt[Double].filter(_ > 0)
+      ((prev \ "queries").extractOpt[Map[String, Double]].getOrElse(Map.empty), controlSec)
+    } catch { case _: Throwable => (Map.empty, None) }
 
   /** Four pinned NEVER-CHANGING queries (code paths untouched for
     * rounds: the flagship aggregate, the AQI banding when-chain, a
@@ -157,26 +143,118 @@ object Bench {
       org.apache.commons.io.FileUtils.deleteQuietly(t)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    wipeDerivedArtifacts()
-    // optional comma-separated query-name filter for focused timing runs
-    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
-      case None        => SparkEntry.queries
+  /** The whole registry, or the comma-separated names of `filter`
+    * (`SPARK_GRAFT_QUERIES`). A filter naming no query or an unknown one
+    * fails before any session starts: a typo would otherwise time an
+    * empty or partial suite and publish it as the next run's baseline.
+    */
+  private[graft] def selectQueries[V](registry: Map[String, V], filter: Option[String]): Map[String, V] =
+    filter match {
+      case None => registry
+      case Some(spec) =>
+        val names = spec.split(",").map(_.trim).filter(_.nonEmpty).toSet
+        val unknown = names.filterNot(registry.contains).toSeq.sorted
+        require(names.nonEmpty, s"SPARK_GRAFT_QUERIES='$spec' names no query")
+        require(unknown.isEmpty, s"SPARK_GRAFT_QUERIES names unknown queries: ${unknown.mkString(", ")}")
+        registry.filter { case (name, _) => names(name) }
     }
 
+  /** Seconds at millisecond precision, or -1 for a failed slot: the
+    * round-2 line (9 digits per query) overflowed the driver's bounded
+    * output capture; at 3 decimals 460 queries fit in ~13 KB.
+    */
+  private[graft] def ms(v: Double): JValue = if (v < 0) JInt(-1) else fixed(v, 3)
+
+  /** `v` rounded to `scale` decimals exactly as `f"%.{scale}f"` prints it. */
+  private[graft] def fixed(v: Double, scale: Int): JDecimal =
+    JDecimal(BigDecimal(v).setScale(scale, BigDecimal.RoundingMode.HALF_UP))
+
+  /** Wall seconds of `body`, and its result. */
+  private[graft] def timed[A](body: => A): (Double, A) = {
+    val t0 = System.nanoTime()
+    val r = body
+    ((System.nanoTime() - t0) / 1e9, r)
+  }
+  private[graft] def seconds(body: => Unit): Double = timed(body)._1
+
+  /** A regression candidate with its [[confirmedRegression]] verdict. */
+  private[graft] final case class Regression(
+      q: String, prev: Double, cur: Double, solo: Double, confirmed: Boolean)
+
+  /** Everything one run publishes; [[lines]] renders it. */
+  private[graft] final case class Record(
+      results: Map[String, Double], failures: Set[String], solo: Map[String, Double],
+      cpus: Int, defaultParallelism: Int, shufflePartitions: Int,
+      controls: Seq[Double], controlSec: Double, controlRatio: Double, // controls: start, mid, end
+      regressions: Seq[Regression], merge5m: Option[JObject], sf: String)
+
+  /** Frees what a query left behind: operator-persisted subplans, and
+    * every persistent RDD — localCheckpoint blocks (iterative operators'
+    * returned tables) are RDD-level and invisible to the SQL cache
+    * registry; left alone they accumulate across the suite and the
+    * eviction churn slows later queries ~20%.
+    */
+  private[graft] def release(spark: SparkSession): Unit = {
+    graft.operators.Caches.release()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
+
+  /** One run's full line (every query's seconds) and short summary line. */
+  private[graft] def lines(r: Record): (String, String) = {
+    def secs(m: Map[String, Double]) =
+      JObject(m.toList.sortBy(_._1).map { case (q, v) => q -> ms(v) })
+    def names(qs: Seq[String]) = JArray(qs.toList.map(JString(_)))
+    val head = List("metric" -> JString("total"),
+      "value" -> ms(r.results.values.filter(_ >= 0).sum), "unit" -> JString("sec"))
+    // the env block lets the driver VERIFY the core-count env was
+    // honored (round-12 `suspect_cpus_ignored` flag): the session's
+    // actual master parallelism and shuffle partitioning, not just the
+    // requested count
+    val env = List("cpus" -> JInt(r.cpus), "default_parallelism" -> JInt(r.defaultParallelism),
+      "shuffle_partitions" -> JInt(r.shufflePartitions),
+      "controls" -> JObject(List("start", "mid", "end").zip(r.controls.map(ms))),
+      "control_sec" -> ms(r.controlSec), "control_set" -> JInt(controlSetVersion),
+      "control_ratio" -> ms(r.controlRatio))
+    val regressions = r.regressions.toList.map(g => JObject(
+      "q" -> JString(g.q), "prev" -> ms(g.prev), "cur" -> ms(g.cur),
+      "solo" -> ms(g.solo), "confirmed" -> JBool(g.confirmed)))
+    val sf = "sf" -> JString(r.sf)
+    val line = JObject(head ++ List("queries" -> secs(r.results), "solo" -> secs(r.solo)) ++
+      env ++ List("regressions" -> JArray(regressions), "failures" -> names(r.failures.toSeq.sorted)) ++
+      r.merge5m.map("merge5m" -> _) :+ sf)
+    val summary = JObject(head ++
+      List("n_queries" -> JInt(r.results.size), "n_failures" -> JInt(r.failures.size)) ++
+      env :+ ("confirmed" -> names(r.regressions.filter(_.confirmed).map(_.q))) :+ sf)
+    (compact(line), compact(summary))
+  }
+
+  /** [[MergeCrossoverBench.measure]]'s metrics plus this session's
+    * control ratio and, after each seconds metric, its ratio-NORMALIZED
+    * twin (raw / control_ratio — the time at the baseline session's
+    * ambient speed), so BASELINE.md's cross-session crossover compares
+    * are drift-proof. A failed `measure` keeps every key, at -1.
+    */
+  private[graft] def merge5mBlock(measure: => Seq[(String, Double)], controlRatio: Double): JObject = {
+    val (metrics, ratio) =
+      try (measure, controlRatio)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] merge5m FAILED: ${e.getMessage}")
+        (MergeCrossoverBench.metricNames.map(_ -> -1.0), -1.0)
+      }
+    JObject(("control_ratio" -> ms(ratio)) :: metrics.toList.flatMap { case (k, v) =>
+      val raw = k -> MergeCrossoverBench.json(k, v)
+      if (!k.endsWith("_sec")) List(raw)
+      else List(raw, k.stripSuffix("_sec") + "_norm_sec" ->
+        (if (v < 0 || ratio <= 0) JInt(-1) else ms(v / ratio)))
+    })
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val filter = sys.env.get("SPARK_GRAFT_QUERIES")
+    val selected = selectQueries(SparkEntry.queries, filter)
+    wipeDerivedArtifacts()
+    val spark = Sessions.driver()
     // Forces evaluation of every output column. xxhash64 covers all the
     // types our queries emit (primitives, strings, arrays, timestamps).
     def force(df: DataFrame): Unit =
@@ -184,15 +262,7 @@ object Bench {
         val ck: Column = call_function("bit_xor", xxhash64(struct(df.columns.map(df.col): _*)))
         df.select(ck.as("__ck")).collect()
         ()
-      } finally {
-        graft.operators.Caches.release() // free operator-persisted subplans
-        // localCheckpoint blocks (iterative operators' returned tables)
-        // are RDD-level and invisible to the SQL cache registry; left
-        // alone they accumulate across a 136-query suite and the
-        // eviction churn slows later queries ~20%. Between queries
-        // nothing may survive, so drop every persistent RDD.
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
+      } finally release(spark)
 
     // warmup: JIT, codegen caches, parquet footers, broadcast paths
     selected.foreach { case (_, fn) =>
@@ -203,23 +273,19 @@ object Bench {
     // controls (always run from the FULL registry, present even under a
     // SPARK_GRAFT_QUERIES filter so filtered runs still normalize)
     def controlsPass(): Double = controlQueries.map { name =>
-      val t0 = System.nanoTime()
-      try force(SparkEntry.queries(name)(spark, sfDir))
-      catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
+      seconds(try force(SparkEntry.queries(name)(spark, sfDir)) catch { case _: Throwable => () })
     }.sum
 
     def timedPass(): (Map[String, Double], Set[String]) = {
       val failed = scala.collection.mutable.Set[String]()
       val times = selected.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok = try { force(fn(spark, sfDir)); true }
+        val (t, ok) = timed(try { force(fn(spark, sfDir)); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           failed += name
           false
-        }
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+        })
+        name -> (if (ok) t else -1.0)
       }
       (times, failed.toSet)
     }
@@ -241,9 +307,9 @@ object Bench {
     // flags; a real single-query regression stands out against the
     // shifted baseline. Candidates join the solo pool below.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
-    val prev = previousQueryTimes(outPath)
+    val (prev, prevControlSec) = previousRun(outPath)
     val controlSec = Seq(ctlStart, ctlMid, ctlEnd).sorted.apply(1) // median
-    val controlRatio = previousControlSec(outPath) match {
+    val controlRatio = prevControlSec match {
       case Some(prevCtl) if controlSec > 0 => controlSec / prevCtl
       // incomparable or absent recorded control total: normalize from
       // the shared control queries' suite times; 1.0 only when even
@@ -275,81 +341,32 @@ object Bench {
       // steady-state the in-suite baseline actually measures.
       try force(selected(name)(spark, sfDir)) catch { case _: Throwable => () }
       System.gc()
-      val t0 = System.nanoTime()
-      val ok = try { force(selected(name)(spark, sfDir)); true }
-      catch { case _: Throwable => false }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      val (t, ok) = timed(try { force(selected(name)(spark, sfDir)); true }
+        catch { case _: Throwable => false })
+      name -> (if (ok) t else -1.0)
     }.toMap
-    // millisecond precision keeps the line ~2 KB for 80+ queries — the
-    // driver captures a bounded output tail, and the round-2 line (9
-    // significant digits per query, ~4 KB) was truncated mid-line there
-    def ms(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
-    val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + ms(v) }
-      .mkString("{", ",", "}")
-    val fj = failures.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val sj = solo.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + ms(v) }
-      .mkString("{", ",", "}")
-    // regressions section: in-suite delta plus the solo verdict —
-    // "confirmed" only when the QUIET-JVM time also exceeds the
-    // previous round's AMBIENT-SCALED baseline by 30% (suite-pressure
-    // drift solo-clears itself; machine drift control-clears itself)
-    val rj = regressionCands.map { q =>
+    val regressions = regressionCands.map { q =>
       val soloT = solo.getOrElse(q, -1.0)
-      val confirmed = confirmedRegression(soloT, prev(q), controlRatio)
-      s"""{"q":"$q","prev":${ms(prev(q))},"cur":${ms(results(q))},"solo":${ms(soloT)},"confirmed":$confirmed}"""
-    }.mkString("[", ",", "]")
+      Regression(q, prev(q), results(q), soloT, confirmedRegression(soloT, prev(q), controlRatio))
+    }
     // the 5M flat-vs-partitioned merge crossover (BASELINE.md's layout
     // claim), regression-tracked: full-suite runs only, timed once
     val merge5m =
-      if (only.nonEmpty) ""
-      else try {
-        val (flatSec, partSec, rewritten) = MergeCrossoverBench.run(spark)
-        val c = MergeCrossoverBench.runCorrection(spark)
-        // the merge5m timings carry the SAME control discipline as the
-        // per-query tracker: the block records this session's control
-        // ratio plus ratio-NORMALIZED seconds (raw / control_ratio —
-        // what the time would read at the baseline session's ambient
-        // speed), so cross-session flat-vs-partitioned crossover
-        // comparisons in BASELINE.md are drift-proof instead of raw
-        def nrm(v: Double): String =
-          if (v < 0 || controlRatio <= 0) "-1" else ms(v / controlRatio)
-        s""","merge5m":{"control_ratio":${f"$controlRatio%.3f"},"flat_delta_sec":${ms(flatSec)},"flat_delta_norm_sec":${nrm(flatSec)},"partitioned_delta_sec":${ms(partSec)},"partitioned_delta_norm_sec":${nrm(partSec)},"rows_rewritten":$rewritten,"mor_correction_sec":${ms(c.morSec)},"mor_correction_norm_sec":${nrm(c.morSec)},"mor_rows_written":${c.morRows},"mor_base_files_read":${c.filesRead},"mor_base_files_total":${c.filesTotal},"mor_minor_sec":${ms(c.minorSec)},"mor_minor_norm_sec":${nrm(c.minorSec)},"mor_minor_rows":${c.minorRows},"mor_compact_sec":${ms(c.compactSec)},"mor_compact_norm_sec":${nrm(c.compactSec)},"mor_compact_rows_rewritten":${c.compactRows},"partitioned_correction_sec":${ms(c.partSec)},"partitioned_correction_norm_sec":${nrm(c.partSec)},"partitioned_rows_rewritten":${c.partRows},"partitioned_minor_sec":${ms(c.pMinorSec)},"partitioned_minor_norm_sec":${nrm(c.pMinorSec)},"partitioned_minor_rows":${c.pMinorRows}}"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] merge5m FAILED: ${e.getMessage}")
-        // keep the object shape identical to the success path so
-        // consumers of the published schema never hit a missing key
-        ""","merge5m":{"control_ratio":-1,"flat_delta_sec":-1,"flat_delta_norm_sec":-1,"partitioned_delta_sec":-1,"partitioned_delta_norm_sec":-1,"rows_rewritten":-1,"mor_correction_sec":-1,"mor_correction_norm_sec":-1,"mor_rows_written":-1,"mor_base_files_read":-1,"mor_base_files_total":-1,"mor_minor_sec":-1,"mor_minor_norm_sec":-1,"mor_minor_rows":-1,"mor_compact_sec":-1,"mor_compact_norm_sec":-1,"mor_compact_rows_rewritten":-1,"partitioned_correction_sec":-1,"partitioned_correction_norm_sec":-1,"partitioned_rows_rewritten":-1,"partitioned_minor_sec":-1,"partitioned_minor_norm_sec":-1,"partitioned_minor_rows":-1}"""
-      }
-    val total = results.values.filter(_ >= 0).sum
-    // the env block lets the driver VERIFY the core-count env was
-    // honored (round-12 `suspect_cpus_ignored` flag): the session's
-    // actual master parallelism and shuffle partitioning, not just the
-    // requested count
-    val ej = s""""cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism},""" +
-      s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")}"""
-    val cj = s"""$ej,"controls":{"start":${ms(ctlStart)},"mid":${ms(ctlMid)},"end":${ms(ctlEnd)}},""" +
-      s""""control_sec":${ms(controlSec)},"control_set":$controlSetVersion,""" +
-      s""""control_ratio":${f"$controlRatio%.3f"}"""
-    val line =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"solo":$sj,$cj,"regressions":$rj,"failures":$fj$merge5m,"sf":"$sfDir"}"""
-    // the full per-query line (430 queries ≈ 17 KB) exceeds the
+      if (filter.nonEmpty) None else Some(merge5mBlock(MergeCrossoverBench.measure(spark), controlRatio))
+    val (line, summary) = lines(Record(results, failures, solo,
+      Sessions.driverCpus, spark.sparkContext.defaultParallelism,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      Seq(ctlStart, ctlMid, ctlEnd), controlSec, controlRatio, regressions, merge5m, sfDir))
+    // the full per-query line (460 queries ≈ 13 KB) exceeds the
     // driver's bounded output capture — round 10's artifact caught only
-    // a truncated, unparseable tail of it. Print a SHORT summary line
-    // (total, counts, control ratio, confirmed regressions) FIRST and
-    // again LAST so whichever end of the output the driver keeps always
-    // contains a complete JSON line; the full map goes in between and
-    // lands intact in the `outPath` file regardless.
-    val confirmedJ = regressionCands
-      .filter(q => confirmedRegression(solo.getOrElse(q, -1.0), prev(q), controlRatio))
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val summary =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${results.size},"n_failures":${failures.size},$cj,"confirmed":$confirmedJ,"sf":"$sfDir"}"""
+    // a truncated, unparseable tail of it. Print the SHORT summary line
+    // FIRST and again LAST so whichever end of the output the driver
+    // keeps always contains a complete JSON line; the full map goes in
+    // between and lands intact in the `outPath` file regardless.
     println(summary)
     println(line)
     println(summary)
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line + "\n")
+    try Files.writeString(Paths.get(outPath), line + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $outPath: ${e.getMessage}") }
     spark.stop()
     if (failures.nonEmpty) sys.exit(1)

@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s.{JInt, JObject, JString}
+import org.json4s.jackson.JsonMethods.compact
 
+import graft.Bench.timed
 import graft.operators.{Caches, Dedup}
 
 /** Corpus-scale throughput benchmark for the dedup family — the
@@ -31,14 +33,7 @@ object DedupBench {
 
   def main(args: Array[String]): Unit = {
     val nDocs = ((args.headOption.map(_.toInt).getOrElse(100000)) / 4) * 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.driver()
 
     val vocab = 5000
     val tokensPerDoc = 40
@@ -58,34 +53,25 @@ object DedupBench {
       .persist()
     val actualDocs = docs.count() // materialize generation outside the timings
 
-    def timed(body: => Long): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val rows = body
-      ((System.nanoTime() - t0) / 1e9, rows)
-    }
-
-    val (tExact, exactRows) = timed(Dedup.exact(docs).count())
-    Caches.release()
-    val (tMinhash, minhashPairs) = timed(Dedup.minHashLsh(docs, threshNum = 9, threshDen = 10).count())
-    Caches.release()
-    val (tPrefix, prefixPairs) = timed(
+    def measured(body: => Long): (Double, Long) = try timed(body) finally Caches.release()
+    val (tExact, exactRows) = measured(Dedup.exact(docs).count())
+    val (tMinhash, minhashPairs) = measured(Dedup.minHashLsh(docs, threshNum = 9, threshDen = 10).count())
+    val (tPrefix, prefixPairs) = measured(
       Dedup.ngramJaccardPairsPrefix(docs, 9, 10).count())
-    Caches.release()
-    val (tClusters, survivors) = timed {
+    val (tClusters, survivors) = measured {
       val pairs = Dedup.minHashLsh(docs, threshNum = 9, threshDen = 10)
       Dedup.keepListFromClusters(
         docs.select(col("doc_id"), length(col("text")).as("score")),
         Dedup.dedupClusters(pairs), scoreCol = "score").count()
     }
-    Caches.release()
 
-    def rps(t: Double): Long = (actualDocs / t).toLong
-    println(
-      s"""{"metric":"dedup_bench","docs":$actualDocs,""" +
-        s""""exact":{"sec":${f"$tExact%.2f"},"docs_per_s":${rps(tExact)},"groups":$exactRows},""" +
-        s""""minhash":{"sec":${f"$tMinhash%.2f"},"docs_per_s":${rps(tMinhash)},"pairs":$minhashPairs},""" +
-        s""""prefix":{"sec":${f"$tPrefix%.2f"},"docs_per_s":${rps(tPrefix)},"pairs":$prefixPairs},""" +
-        s""""clusters":{"sec":${f"$tClusters%.2f"},"docs_per_s":${rps(tClusters)},"survivors":$survivors}}""")
+    def phase(t: Double, countName: String, n: Long) = JObject(
+      "sec" -> Bench.fixed(t, 2), "docs_per_s" -> JInt((actualDocs / t).toLong), countName -> JInt(n))
+    println(compact(JObject("metric" -> JString("dedup_bench"), "docs" -> JInt(actualDocs),
+      "exact" -> phase(tExact, "groups", exactRows),
+      "minhash" -> phase(tMinhash, "pairs", minhashPairs),
+      "prefix" -> phase(tPrefix, "pairs", prefixPairs),
+      "clusters" -> phase(tClusters, "survivors", survivors))))
     spark.stop()
   }
 }

@@ -2,6 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s.{JInt, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.compact
+
+import graft.Bench.seconds
+import graft.operators.{Merge, MergeSpec}
+import graft.sources.{Layout, MergeOnRead, Warehouse}
 
 /** The flat-vs-partitioned fact-merge crossover at 5M rows, as a
   * regression-tracked bench row instead of BASELINE.md prose.
@@ -28,14 +34,41 @@ object MergeCrossoverBench {
   private val Rows = 5000000L
   private val Months = 80
 
-  /** Standalone entry for focused runs; Bench calls [[run]] inline. */
+  /** Standalone entry for focused runs; Bench calls [[measure]] inline. */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.local("merge5m", cpus)
-    val (flatSec, partSec, rewritten) = run(spark)
-    val c = runCorrection(spark)
-    println(f"""{"metric":"merge5m","flat_delta_sec":$flatSec%.3f,"partitioned_delta_sec":$partSec%.3f,"rows_rewritten":$rewritten,"mor_correction_sec":${c.morSec}%.3f,"mor_rows_written":${c.morRows},"mor_base_files_read":${c.filesRead},"mor_base_files_total":${c.filesTotal},"mor_minor_sec":${c.minorSec}%.3f,"mor_minor_rows":${c.minorRows},"mor_compact_sec":${c.compactSec}%.3f,"mor_compact_rows_rewritten":${c.compactRows},"partitioned_correction_sec":${c.partSec}%.3f,"partitioned_rows_rewritten":${c.partRows},"partitioned_minor_sec":${c.pMinorSec}%.3f,"partitioned_minor_rows":${c.pMinorRows}}""")
+    val spark = Sessions.driver()
+    val fields = measure(spark).map { case (k, v) => k -> json(k, v) }
+    println(compact(JObject(("metric" -> JString("merge5m")) :: fields.toList)))
     spark.stop()
+  }
+
+  /** One merge5m measurement: [[run]]'s delta merges plus [[runCorrection]]. */
+  private final case class Measurement(flatSec: Double, partSec: Double, rewritten: Long, c: CorrectionMetrics)
+
+  /** merge5m's published metrics, in publication order. */
+  private val metrics: Seq[(String, Measurement => Double)] = Seq(
+    ("flat_delta_sec", _.flatSec), ("partitioned_delta_sec", _.partSec),
+    ("rows_rewritten", _.rewritten.toDouble),
+    ("mor_correction_sec", _.c.morSec), ("mor_rows_written", _.c.morRows.toDouble),
+    ("mor_base_files_read", _.c.filesRead.toDouble), ("mor_base_files_total", _.c.filesTotal.toDouble),
+    ("mor_minor_sec", _.c.minorSec), ("mor_minor_rows", _.c.minorRows.toDouble),
+    ("mor_compact_sec", _.c.compactSec), ("mor_compact_rows_rewritten", _.c.compactRows.toDouble),
+    ("partitioned_correction_sec", _.c.partSec), ("partitioned_rows_rewritten", _.c.partRows.toDouble),
+    ("partitioned_minor_sec", _.c.pMinorSec), ("partitioned_minor_rows", _.c.pMinorRows.toDouble))
+
+  val metricNames: Seq[String] = metrics.map(_._1)
+
+  /** A metric's JSON value: names ending `_sec` are seconds, published at
+    * millisecond precision; the rest are row or file counts.
+    */
+  def json(name: String, v: Double): JValue =
+    if (name.endsWith("_sec")) Bench.ms(v) else JInt(v.toLong)
+
+  /** Runs both scenarios once; the metrics in publication order. */
+  def measure(spark: SparkSession): Seq[(String, Double)] = {
+    val (flatSec, partSec, rewritten) = run(spark)
+    val m = Measurement(flatSec, partSec, rewritten, runCorrection(spark))
+    metrics.map { case (name, get) => name -> get(m) }
   }
 
   /** The correction scenario's published evidence (see [[runCorrection]]). */
@@ -47,6 +80,13 @@ object MergeCrossoverBench {
       partSec: Double, partRows: Long,
       pMinorSec: Double, pMinorRows: Long)
 
+  private def workDir(): String = java.nio.file.Files.createDirectories(
+    java.nio.file.Paths.get("target/graft_wh/merge5m").toAbsolutePath).toString
+
+  // both scenarios' merges: one key, one value column, a fixed clock
+  private val spec = MergeSpec(Seq("o_orderkey"), Seq("o_totalprice"))
+  private def now = to_timestamp(lit("2024-06-01 00:00:00"))
+
   private def baseDf(spark: SparkSession): DataFrame =
     spark.range(Rows).select(
       col("id").as("o_orderkey"),
@@ -57,10 +97,7 @@ object MergeCrossoverBench {
 
   /** @return (flat_delta_sec, partitioned_delta_sec, rows_rewritten) */
   def run(spark: SparkSession): (Double, Double, Long) = {
-    import graft.operators.{Merge, MergeSpec}
-    import graft.sources.{Layout, Warehouse}
-    val dir = new java.io.File("target/graft_wh/merge5m").getAbsolutePath
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    val dir = workDir()
     val marker = java.nio.file.Paths.get(dir, "base_rows")
     val fresh = java.nio.file.Files.exists(marker) &&
       java.nio.file.Files.readString(marker).trim == Rows.toString &&
@@ -79,19 +116,13 @@ object MergeCrossoverBench {
       .withColumn("o_totalprice", col("o_totalprice") * 2)
     val delta = upd.unionByName(
       upd.withColumn("o_orderkey", -col("o_orderkey") - 1))
-    val spec = MergeSpec(Seq("o_orderkey"), Seq("o_totalprice"))
-    val now = to_timestamp(lit("2024-06-01 00:00:00"))
-
-    def timed(f: => Unit): Double = {
-      val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-    }
-    val flatSec = timed {
+    val flatSec = seconds {
       val tgt = Warehouse.read(spark, dir, "m5_flat")
       val merged = Merge.scd1(tgt, delta, spec, now)
         .select(tgt.columns.map(col).toIndexedSeq: _*)
       Warehouse.overwrite(merged, dir, "m5_flat")
     }
-    val partSec = timed {
+    val partSec = seconds {
       Merge.scd1PartitionScoped(spark, dir, "m5_part", "o_month", delta, spec, now)
     }
     // layouts must agree — the crossover is only meaningful if both
@@ -129,10 +160,7 @@ object MergeCrossoverBench {
     * one-delta chain.
     */
   def runCorrection(spark: SparkSession): CorrectionMetrics = {
-    import graft.operators.{Merge, MergeSpec}
-    import graft.sources.{MergeOnRead, Warehouse}
-    val dir = new java.io.File("target/graft_wh/merge5m").getAbsolutePath
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    val dir = workDir()
     // the MoR twin of m5_flat/m5_part, materialized once per machine;
     // freshness via the CURRENT live row count (corrections are
     // updates, so it stays Rows across compactions). A pre-partition-
@@ -149,13 +177,8 @@ object MergeCrossoverBench {
     val corr = baseDf(spark)
       .filter(col("o_orderkey") % Months === 0 && col("o_orderkey") < 10L * Months)
       .withColumn("o_totalprice", col("o_totalprice") + 1000000.0)
-    val spec = MergeSpec(Seq("o_orderkey"), Seq("o_totalprice"))
-    val now = to_timestamp(lit("2024-06-01 00:00:00"))
-    def timed(f: => Unit): Double = {
-      val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-    }
     val nextBatch = MergeOnRead.manifest(spark, dir, "m5_mor").lastBatch + 1
-    val morSec = timed {
+    val morSec = seconds {
       MergeOnRead.deltaMerge(spark, dir, "m5_mor", corr, spec, now, nextBatch)
     }
     val morRows = MergeOnRead.deltaRowCounts(spark, dir, "m5_mor").last
@@ -173,12 +196,12 @@ object MergeCrossoverBench {
       .withColumn("o_totalprice", col("o_totalprice") + 2000000.0)
     MergeOnRead.deltaMerge(spark, dir, "m5_mor", corr2, spec, now, nextBatch + 1)
     val genBefore = MergeOnRead.manifest(spark, dir, "m5_mor").baseGen
-    val minorSec = timed { MergeOnRead.compactMinor(spark, dir, "m5_mor") }
+    val minorSec = seconds { MergeOnRead.compactMinor(spark, dir, "m5_mor") }
     val mMinor = MergeOnRead.manifest(spark, dir, "m5_mor")
     require(mMinor.baseGen == genBefore && mMinor.deltaSeqs.size == 1,
       s"minor compaction must fold the chain without a base fold: $mMinor")
     val minorRows = MergeOnRead.deltaRowCounts(spark, dir, "m5_mor").last
-    val partSec = timed {
+    val partSec = seconds {
       Merge.scd1PartitionScoped(spark, dir, "m5_part", "o_month",
         corr.unionByName(corr2), spec, now)
     }
@@ -200,7 +223,7 @@ object MergeCrossoverBench {
     // fold the chain: partition-scoped compaction rewrites the dirty
     // month (~Rows/Months rows), never the 5M base — the write
     // footprint is read off the manifest's fresh-generation entries
-    val compactSec = timed { MergeOnRead.compact(spark, dir, "m5_mor") }
+    val compactSec = seconds { MergeOnRead.compact(spark, dir, "m5_mor") }
     val mAfter = MergeOnRead.manifest(spark, dir, "m5_mor")
     val compactRows = mAfter.pmap.filter(_._2 == mAfter.baseGen).map(_._3).sum
     require(mAfter.baseRows == Rows,
@@ -224,7 +247,7 @@ object MergeCrossoverBench {
     MergeOnRead.deltaMerge(spark, dir, "m5_mor", corr3, spec, now, b2)
     MergeOnRead.deltaMerge(spark, dir, "m5_mor", corr4, spec, now, b2 + 1)
     val mBeforePMinor = MergeOnRead.manifest(spark, dir, "m5_mor")
-    val pMinorSec = timed { MergeOnRead.compactMinor(spark, dir, "m5_mor") }
+    val pMinorSec = seconds { MergeOnRead.compactMinor(spark, dir, "m5_mor") }
     val mPMinor = MergeOnRead.manifest(spark, dir, "m5_mor")
     require(mPMinor.baseGen == mBeforePMinor.baseGen &&
         mPMinor.pmap == mBeforePMinor.pmap && mPMinor.deltaSeqs.size == 1,

@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.json4s.{JDouble, JInt, JObject, JString}
+import org.json4s.jackson.JsonMethods.compact
 
+import graft.Bench.timed
 import graft.operators.{Caches, Similarity}
 
 /** Vector-search throughput + recall benchmark — the ANN analog of
@@ -27,34 +29,23 @@ object SimilarityBench {
     val dim = args.lift(1).map(_.toInt).getOrElse(64)
     val nQueries = 50
     val k = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.driver()
 
     // clustered corpus: direction of cluster c, component j is a hash
     // in [-1, 1]; each member adds +-0.15 jitter — cosine structure IVF
     // can exploit, deterministic end to end
-    val emb = spark.range(nVecs.toLong)
-      .select(col("id").as("vec_id"),
-        expr(s"""transform(sequence(0, ${dim - 1}), j -> CAST(
-          (pmod(hash(id % 100, j), 2001) - 1000) / 1000.0 +
-          (pmod(hash(id, j), 301) - 150) / 1000.0 AS FLOAT))""").as("embedding"))
-      .persist()
-    emb.count()
+    def corpus(component: String) = { // component j of vector `id`, as SQL
+      val df = spark.range(nVecs.toLong).select(col("id").as("vec_id"), expr(
+        s"transform(sequence(0, ${dim - 1}), j -> CAST($component AS FLOAT))").as("embedding"))
+      df.persist().count()
+      df
+    }
+    val emb = corpus("""(pmod(hash(id % 100, j), 2001) - 1000) / 1000.0 +
+      (pmod(hash(id, j), 301) - 150) / 1000.0""")
 
     val isQuery = col("vec_id") < nQueries
     val isCand = col("vec_id") >= nQueries.toLong
 
-    def timed[A](body: => A): (Double, A) = {
-      val t0 = System.nanoTime()
-      val r = body
-      ((System.nanoTime() - t0) / 1e9, r)
-    }
     def collectPairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
       val out = df.select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -129,17 +120,11 @@ object SimilarityBench {
     // standard point is also measured on a cluster + rank-4-latent
     // corpus: neighbors differ along 4 latent axes that 256-entry
     // books resolve well.
-    val emb2 = spark.range(nVecs.toLong)
-      .select(col("id").as("vec_id"),
-        expr(s"""transform(sequence(0, ${dim - 1}), j -> CAST(
-          (pmod(hash(id % 100, j), 2001) - 1000) / 1000.0 +
-          ((pmod(hash(id, 1000), 601) - 300) / 1000.0) * ((pmod(hash(2000, j), 2001) - 1000) / 1000.0) +
-          ((pmod(hash(id, 1001), 601) - 300) / 1000.0) * ((pmod(hash(2001, j), 2001) - 1000) / 1000.0) +
-          ((pmod(hash(id, 1002), 601) - 300) / 1000.0) * ((pmod(hash(2002, j), 2001) - 1000) / 1000.0) +
-          ((pmod(hash(id, 1003), 601) - 300) / 1000.0) * ((pmod(hash(2003, j), 2001) - 1000) / 1000.0)
-          AS FLOAT))""").as("embedding"))
-      .persist()
-    emb2.count()
+    val emb2 = corpus("""(pmod(hash(id % 100, j), 2001) - 1000) / 1000.0 +
+      ((pmod(hash(id, 1000), 601) - 300) / 1000.0) * ((pmod(hash(2000, j), 2001) - 1000) / 1000.0) +
+      ((pmod(hash(id, 1001), 601) - 300) / 1000.0) * ((pmod(hash(2001, j), 2001) - 1000) / 1000.0) +
+      ((pmod(hash(id, 1002), 601) - 300) / 1000.0) * ((pmod(hash(2002, j), 2001) - 1000) / 1000.0) +
+      ((pmod(hash(id, 1003), 601) - 300) / 1000.0) * ((pmod(hash(2003, j), 2001) - 1000) / 1000.0)""")
     val (tBrute2, truth2) = timed(collectPairs(
       Similarity.bruteForceTopK(emb2, isQuery, isCand, k)))
     def recall2(got: Set[(Long, Long)]): Double =
@@ -152,21 +137,23 @@ object SimilarityBench {
         numCentroids = 64, nProbe = 8, m = 8, codebookSize = 256,
         refine = 20 * k, refineIters = 2)))
 
-    def phase(name: String, t: Double, r: Double): String =
-      s""""$name":{"sec":${f"$t%.2f"},"recall_at_$k":${f"$r%.3f"}}"""
-    println(
-      s"""{"metric":"ann_bench","vectors":$nVecs,"dim":$dim,"queries":$nQueries,""" +
-        s""""brute":{"sec":${f"$tBrute%.2f"},"recall_at_$k":1.0},""" +
-        s""""ivf_build":{"sec":${f"$tBuild%.2f"}},""" +
-        phase("ivf_probe", tIvf, recall(ivf)) + "," +
-        phase("lsh", tLsh, recall(lsh)) + "," +
-        phase("pq_trained", tPqT, recall(pqTrained)) + "," +
-        phase("pq_slice", tPq0, recall(pqSlice)) + "," +
-        phase("pq_standard_m8x256", tPqStd, recall(pqStd)) + "," +
-        phase("ivfpq_standard_m8x256", tIvfPqStd, recall(ivfPqStd)) + "," +
-        s""""brute_lowrank":{"sec":${f"$tBrute2%.2f"},"recall_at_$k":1.0},""" +
-        phase("pq_standard_lowrank", tPqStd2, recall2(pqStd2)) + "," +
-        phase("ivfpq_standard_lowrank", tIvfPqStd2, recall2(ivfPqStd2)) + "}")
+    def phase(t: Double, r: Double) =
+      JObject("sec" -> Bench.fixed(t, 2), s"recall_at_$k" -> Bench.fixed(r, 3))
+    def exact(t: Double) = JObject("sec" -> Bench.fixed(t, 2), s"recall_at_$k" -> JDouble(1.0))
+    println(compact(JObject(
+      "metric" -> JString("ann_bench"), "vectors" -> JInt(nVecs), "dim" -> JInt(dim),
+      "queries" -> JInt(nQueries),
+      "brute" -> exact(tBrute),
+      "ivf_build" -> JObject("sec" -> Bench.fixed(tBuild, 2)),
+      "ivf_probe" -> phase(tIvf, recall(ivf)),
+      "lsh" -> phase(tLsh, recall(lsh)),
+      "pq_trained" -> phase(tPqT, recall(pqTrained)),
+      "pq_slice" -> phase(tPq0, recall(pqSlice)),
+      "pq_standard_m8x256" -> phase(tPqStd, recall(pqStd)),
+      "ivfpq_standard_m8x256" -> phase(tIvfPqStd, recall(ivfPqStd)),
+      "brute_lowrank" -> exact(tBrute2),
+      "pq_standard_lowrank" -> phase(tPqStd2, recall2(pqStd2)),
+      "ivfpq_standard_lowrank" -> phase(tIvfPqStd2, recall2(ivfPqStd2)))))
     spark.stop()
   }
 }

@@ -4,7 +4,12 @@ import java.io.{BufferedWriter, FileWriter}
 import java.nio.file.{Files, Paths}
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
+import scala.util.Random
+
+import org.json4s.{JDouble, JInt, JObject, JString}
+import org.json4s.jackson.JsonMethods.compact
+
+import graft.Bench.seconds
 
 /** Reference-scale throughput benchmark for the AQI pipeline.
   *
@@ -30,45 +35,15 @@ object AqiBench {
     val totalRows = (args.headOption.map(_.toInt).getOrElse(1000000) / 3) * 3
     val work = args.lift(1).getOrElse(
       Files.createTempDirectory("aqi-bench").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.driver()
 
     val srcA = s"$work/srcA"; val srcB = s"$work/srcB"; val wh = s"$work/wh"
     Files.createDirectories(Paths.get(srcA)); Files.createDirectories(Paths.get(srcB))
-
-    // state_code and state_id are FUNCTIONS of state_name (as in the EPA
-    // data) — breaking that dependency makes the state dim multi-row per
-    // state and cascades multiplicatively through the dim merges
-    val rnd = new scala.util.Random(42)
-    val states = (1 to 51).map(i => f"State$i%02d")
-    val counties = (0 until 3000).map { i =>
-      val stateIdx = i % states.length
-      (f"County$i%04d", states(stateIdx), f"${10000 + i}%05d", stateIdx)
-    }
+    val corpus = initialCorpus(srcA, totalRows)
+    import corpus.{counties, createdDay, rnd, rowsPerDay}
     writeCounties(s"$srcA/uscounties.csv", counties)
     writeCounties(s"$srcB/uscounties.csv", counties)
-
-    // —— initial corpus: totalRows rows across 3 files. `created` (and
-    // therefore measured_date, which the pipeline derives from it)
-    // spreads over ~NumDays days as a function of the key, so the
-    // date-partitioned fact layout has realistic cardinality ——
-    var key = 0
-    val rowsPerDay = math.max(1, totalRows / NumDays)
-    def createdDay(k: Int): String = dayString(k / rowsPerDay)
-    for (f <- 0 until 3) {
-      val w = csv(s"$srcA/10_state_aqi_202$f.csv")
-      for (_ <- 0 until totalRows / 3) {
-        w.write(row(counties, rnd, key, createdDay(key), "2026-01-01")); key += 1
-      }
-      w.close()
-    }
+    var key = corpus.nextKey
 
     // —— delta corpus: 10% volume, last_updated ≈ t1 (inside run 2's
     // CET/LSET window). Updates keep their key's original created day —
@@ -90,16 +65,16 @@ object AqiBench {
     wB.close()
 
     // —— flat layout (reference scale): full merge + full overwrite ——
-    val run1 = timed { Pipeline.run(spark, srcA, wh, Instant.parse("2026-01-02T00:00:00Z")) }
-    val run2 = timed { Pipeline.run(spark, srcB, wh, Instant.parse("2026-01-04T00:00:00Z")) }
+    val run1 = seconds { Pipeline.run(spark, srcA, wh, Instant.parse("2026-01-02T00:00:00Z")) }
+    val run2 = seconds { Pipeline.run(spark, srcB, wh, Instant.parse("2026-01-04T00:00:00Z")) }
     val nds = graft.sources.Warehouse.read(spark, wh, Pipeline.MeasurementNdsT).count()
 
     // —— date-partitioned layout (100 TB path): the delta merge reads
     // and rewrites only the ~31 touched date partitions ——
     val whP = s"$work/whP"
-    val p1 = timed { Pipeline.run(spark, srcA, whP,
+    val p1 = seconds { Pipeline.run(spark, srcA, whP,
       Instant.parse("2026-01-02T00:00:00Z"), partitionedFacts = true) }
-    val p2 = timed { Pipeline.run(spark, srcB, whP,
+    val p2 = seconds { Pipeline.run(spark, srcB, whP,
       Instant.parse("2026-01-04T00:00:00Z"), partitionedFacts = true) }
     val ndsP = graft.sources.Warehouse.read(spark, whP, Pipeline.MeasurementNdsT).count()
     require(ndsP == nds, s"layouts disagree: flat=$nds partitioned=$ndsP")
@@ -113,13 +88,47 @@ object AqiBench {
     val rewritten = graft.sources.Warehouse.read(spark, whP, Pipeline.MeasurementNdsT)
       .join(deltaDates, Seq("measured_date"), "left_semi").count()
 
-    println(s"""{"metric":"aqi_pipeline","initial_rows":$totalRows,"initial_sec":$run1,""" +
-      s""""initial_rows_per_sec":${(totalRows / run1).toLong},"delta_rows":$deltaRows,""" +
-      s""""delta_sec":$run2,"delta_rows_per_sec":${(deltaRows / run2).toLong},""" +
-      s""""partitioned_initial_sec":$p1,"partitioned_delta_sec":$p2,""" +
-      s""""partitioned_delta_rows_rewritten":$rewritten,""" +
-      s""""measurement_nds_rows":$nds}""")
+    println(compact(JObject("metric" -> JString("aqi_pipeline"), "initial_rows" -> JInt(totalRows),
+      "initial_sec" -> JDouble(run1), "initial_rows_per_sec" -> JInt((totalRows / run1).toLong),
+      "delta_rows" -> JInt(deltaRows), "delta_sec" -> JDouble(run2),
+      "delta_rows_per_sec" -> JInt((deltaRows / run2).toLong),
+      "partitioned_initial_sec" -> JDouble(p1), "partitioned_delta_sec" -> JDouble(p2),
+      "partitioned_delta_rows_rewritten" -> JInt(rewritten), "measurement_nds_rows" -> JInt(nds))))
     spark.stop()
+  }
+
+  /** The seeded corpus both throughput mains start from: 3,000 counties
+    * over 51 states, and `totalRows` rows in three CSV files in `dir`.
+    * `created` (hence measured_date) spreads over ~NumDays days by key,
+    * so the date-partitioned layout has realistic cardinality. Each
+    * main's delta continues from `rnd` and `nextKey`.
+    */
+  private[aqi] final case class Corpus(
+      counties: IndexedSeq[(String, String, String, Int)],
+      rnd: Random, nextKey: Int, rowsPerDay: Int) {
+    def createdDay(k: Int): String = dayString(k / rowsPerDay)
+  }
+
+  private[aqi] def initialCorpus(dir: String, totalRows: Int): Corpus = {
+    // state_code and state_id are FUNCTIONS of state_name (as in the EPA
+    // data) — breaking that dependency makes the state dim multi-row per
+    // state and cascades multiplicatively through the dim merges
+    val rnd = new Random(42)
+    val states = (1 to 51).map(i => f"State$i%02d")
+    val counties = (0 until 3000).map { i =>
+      val stateIdx = i % states.length
+      (f"County$i%04d", states(stateIdx), f"${10000 + i}%05d", stateIdx)
+    }
+    val rowsPerDay = math.max(1, totalRows / NumDays)
+    var key = 0
+    for (f <- 0 until 3) {
+      val w = csv(s"$dir/10_state_aqi_202$f.csv")
+      for (_ <- 0 until totalRows / 3) {
+        w.write(row(counties, rnd, key, dayString(key / rowsPerDay), "2026-01-01")); key += 1
+      }
+      w.close()
+    }
+    Corpus(counties, rnd, key, rowsPerDay)
   }
 
   /** ~3 years of distinct measured dates, like the reference's 3 annual
@@ -129,10 +138,6 @@ object AqiBench {
 
   private[aqi] def dayString(d: Int): String =
     java.time.LocalDate.of(2021, 1, 1).plusDays(d % NumDays).toString
-
-  private def timed(f: => Unit): Double = {
-    val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-  }
 
   private[aqi] def csv(path: String): BufferedWriter = {
     val w = new BufferedWriter(new FileWriter(path), 1 << 20)

@@ -2,8 +2,10 @@ package graft.aqi
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.json4s.{JDouble, JInt, JObject, JString}
+import org.json4s.jackson.JsonMethods.compact
 
+import graft.Bench.seconds
 import graft.operators.MergeSpec
 import graft.streaming.Streams
 
@@ -28,36 +30,13 @@ object AqiStreamBench {
     val totalRows = (args.headOption.map(_.toInt).getOrElse(1000000) / 3) * 3
     val work = args.lift(1).getOrElse(
       Files.createTempDirectory("aqi-stream-bench").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.driver()
 
     val src = s"$work/src"; val srcDelta = s"$work/srcDelta"
     Files.createDirectories(Paths.get(src)); Files.createDirectories(Paths.get(srcDelta))
-
-    // same corpus shape as AqiBench: business key is a bijection of
-    // `key`, created-day spreads over ~NumDays days
-    val rnd = new scala.util.Random(42)
-    val states = (1 to 51).map(i => f"State$i%02d")
-    val counties = (0 until 3000).map { i =>
-      (f"County$i%04d", states(i % states.length), f"${10000 + i}%05d", i % states.length)
-    }
-    var key = 0
-    val rowsPerDay = math.max(1, totalRows / AqiBench.NumDays)
-    def createdDay(k: Int): String = AqiBench.dayString(k / rowsPerDay)
-    for (f <- 0 until 3) {
-      val w = AqiBench.csv(s"$src/10_state_aqi_202$f.csv")
-      for (_ <- 0 until totalRows / 3) {
-        w.write(AqiBench.row(counties, rnd, key, createdDay(key), "2026-01-01")); key += 1
-      }
-      w.close()
-    }
+    val corpus = AqiBench.initialCorpus(src, totalRows)
+    import corpus.{counties, createdDay, rnd}
+    var key = corpus.nextKey
     val initialKeys = key
     val deltaRows = totalRows / 10
     val wD = AqiBench.csv(s"$srcDelta/10_state_aqi_2024.csv")
@@ -71,13 +50,9 @@ object AqiStreamBench {
     }
     wD.close()
 
-    def timed(f: => Unit): Double = {
-      val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-    }
-
     // —— phase 1: streaming staging (CSV file source → parquet) ——
     val staged = s"$work/staged"
-    val stageSec = timed {
+    val stageSec = seconds {
       Staging.stageAqiStream(spark, src, staged, s"$work/cp-stage").awaitTermination()
     }
     val stagedRows = spark.read.parquet(staged).count()
@@ -94,7 +69,7 @@ object AqiStreamBench {
       touchCols = Seq("last_updated"))
     def stagedStream(dir: String) =
       spark.readStream.schema(Schemas.stateAqiStage).parquet(dir)
-    val upsertSec = timed {
+    val upsertSec = seconds {
       Streams.upsertStream(stagedStream(staged), wh, "measurement_stream",
         spec, s"$work/cp-upsert").awaitTermination()
     }
@@ -106,19 +81,19 @@ object AqiStreamBench {
     val stagedDelta = s"$work/stagedDelta"
     Staging.stageAqiStream(spark, srcDelta, stagedDelta, s"$work/cp-stage-delta")
       .awaitTermination()
-    val deltaSec = timed {
+    val deltaSec = seconds {
       Streams.upsertStream(stagedStream(stagedDelta), wh, "measurement_stream",
         spec, s"$work/cp-upsert-delta").awaitTermination()
     }
     val whRows2 = graft.sources.Warehouse.read(spark, wh, "measurement_stream").count()
     require(whRows2 == totalRows + deltaRows / 2, s"after delta: $whRows2")
 
-    println(s"""{"metric":"aqi_stream","stage_rows":$totalRows,"stage_sec":$stageSec,""" +
-      s""""stage_rows_per_sec":${(totalRows / stageSec).toLong},""" +
-      s""""upsert_rows":$totalRows,"upsert_sec":$upsertSec,""" +
-      s""""upsert_rows_per_sec":${(totalRows / upsertSec).toLong},""" +
-      s""""delta_rows":$deltaRows,"delta_sec":$deltaSec,""" +
-      s""""delta_rows_per_sec":${(deltaRows / deltaSec).toLong}}""")
+    println(compact(JObject("metric" -> JString("aqi_stream"), "stage_rows" -> JInt(totalRows),
+      "stage_sec" -> JDouble(stageSec), "stage_rows_per_sec" -> JInt((totalRows / stageSec).toLong),
+      "upsert_rows" -> JInt(totalRows), "upsert_sec" -> JDouble(upsertSec),
+      "upsert_rows_per_sec" -> JInt((totalRows / upsertSec).toLong),
+      "delta_rows" -> JInt(deltaRows), "delta_sec" -> JDouble(deltaSec),
+      "delta_rows_per_sec" -> JInt((deltaRows / deltaSec).toLong))))
     spark.stop()
   }
 }

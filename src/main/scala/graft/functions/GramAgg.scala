@@ -25,22 +25,29 @@ final case class GramCell(i: Int, j: Int, n_vecs: Long, sumprod_fp: String)
   * one buffer per map task instead of one partial row per cell.
   *
   * 128-bit cells without BigInt in the hot loop: a cell is
-  * `hi·2^62 + lo` with the invariant |lo| < 2^62. Each product is
-  * |p| ≤ 2^(2·(scaleBits+1)) (≤ 2^50 at the default 24 bits for
-  * unit-scale components), so `lo += p` cannot overflow a signed long
-  * before the renormalization step re-establishes the invariant. The
-  * exact value is materialized as BigInt only in `finish`.
+  * `hi·2^62 + lo` with the invariant |lo| < 2^62. The input contract
+  * bounds each quantized component to |q(x)| ≤ 2^31, so each product is
+  * |p| ≤ 2^62 and `lo += p` cannot overflow a signed long before the
+  * renormalization step re-establishes the invariant. The exact value
+  * is materialized as BigInt only in `finish`.
+  *
+  * Input contract: every component is finite and |x|·2^scaleBits ≤ 2^31
+  * (|x| ≤ 128 at the default 24 bits). A component outside it fails the
+  * aggregation with one IllegalArgumentException naming the contract —
+  * never a wrapped-around product. Null rows contribute nothing; a null
+  * element reaches `reduce` as 0.0 (the input encoder unboxes it).
   *
   * Rows may differ in length: cells are packed by the dim-independent
   * triangle index `j·(j+1)/2 + i`, and buffers grow to the longest row
   * seen, so per-cell counts stay exact (a cell counts the rows that
-  * have BOTH its positions). Null rows contribute nothing.
+  * have BOTH its positions).
   */
 class GramAgg(scaleBits: Int)
     extends Aggregator[Seq[Double], (Array[Long], Array[Long], Array[Long]), Seq[GramCell]] {
 
   private val q = math.pow(2, scaleBits)
   private val LIM = 1L << 62
+  private val MaxQ = (1L << 31).toDouble
 
   // EXACTLY Catalyst's `round(cast(x as double) * 2^scaleBits)`: the
   // double multiply first (exact — the scale is a power of two), then
@@ -48,9 +55,12 @@ class GramAgg(scaleBits: Int)
   // representation, HALF_UP). Multiplying in BigDecimal instead would
   // round the SHORTEST-DECIMAL form of x rather than of x·2^bits and
   // drift on representation edges (caught by the oracle compare).
-  private def quant(x: Double): Long =
+  private def quant(x: Double): Long = {
+    require(math.abs(x * q) <= MaxQ, // false for NaN too
+      s"GramAgg: components must be finite with |x|·2^$scaleBits ≤ 2^31; got $x")
     java.math.BigDecimal.valueOf(x * q)
       .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
+  }
 
   private def grown(a: Array[Long], n: Int): Array[Long] =
     if (a.length >= n) a else java.util.Arrays.copyOf(a, n)

@@ -1174,17 +1174,22 @@ object Similarity {
     * Gram/covariance accumulation behind PCA, whitening, and embedding
     * drift monitors. Emits the upper triangle `(i, j, n_vecs,
     * sumprod_fp)` where `sumprod_fp = Σ q(xᵢ)·q(xⱼ)` over all vectors,
-    * components quantized to `2^scaleBits` first — integer products
-    * summed exactly (carried in decimal(38,0), emitted as a digit
+    * components quantized to `q(x) = HALF_UP(x·2^scaleBits)` first —
+    * integer products summed exactly (128-bit cells, emitted as a digit
     * string like the other exact-sum queries), so the matrix is
     * partition-order-independent and engine-identical. Centering:
     * covariance = (S_ij − S_i·S_j/n)/n from this plus
     * [[groupedVectorSums]]' first moments — left to the consumer to
     * keep every gated number integer.
     *
-    * Shape at 100 TB: the dim² expansion is map-side (two chained
-    * generators per row); the single shuffle aggregates into
-    * dim·(dim+1)/2 groups with map-side partial sums — reduce volume is
+    * Input contract ([[graft.functions.GramAgg]]): components finite
+    * with |x|·2^scaleBits ≤ 2^31 (|x| ≤ 128 at 24 bits), else the query
+    * fails with an IllegalArgumentException naming the contract. A null
+    * vector contributes nothing; a null element reads as 0.0.
+    *
+    * Shape at 100 TB: one typed Aggregator; each map task folds its
+    * rows into a dim·(dim+1)/2-cell buffer of primitive longs, and the
+    * single shuffle moves one buffer per task — reduce volume is
     * O(dim²), independent of corpus size. For dim beyond ~1k, switch to
     * blocked accumulation (tile the pair space); at 64–256 dims this
     * direct form is the right plan.

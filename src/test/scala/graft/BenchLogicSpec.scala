@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.Files
+
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.parse
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench tracker's ambient normalization, pinned without a timed
@@ -106,5 +110,82 @@ class BenchLogicSpec extends AnyFunSuite {
     // expensive iterative queries live in, not just scheduling floor
     assert(Bench.controlQueries.contains("graph_sssp"))
     assert(Bench.controlSetVersion == 2)
+  }
+
+  // A published line, byte for byte as earlier runs wrote it: three
+  // queries (one failed), control_set 2, a failed merge5m. Held here, not
+  // read from BENCH_LAST.json, which every bench run overwrites.
+  private val fixtureLine =
+    """{"metric":"total","value":0.463,"unit":"sec","queries":{"p6_aqi_banding":-1,"q1_agg":0.313,"s5_point_lookup":0.150},"solo":{"q1_agg":0.301},"cpus":4,"default_parallelism":4,"shuffle_partitions":4,"controls":{"start":2.500,"mid":2.413,"end":2.610},"control_sec":2.500,"control_set":2,"control_ratio":1.046,"regressions":[],"failures":["p6_aqi_banding"],"merge5m":{"control_ratio":-1,"flat_delta_sec":-1,"flat_delta_norm_sec":-1,"partitioned_delta_sec":-1,"partitioned_delta_norm_sec":-1,"rows_rewritten":-1,"mor_correction_sec":-1,"mor_correction_norm_sec":-1,"mor_rows_written":-1,"mor_base_files_read":-1,"mor_base_files_total":-1,"mor_minor_sec":-1,"mor_minor_norm_sec":-1,"mor_minor_rows":-1,"mor_compact_sec":-1,"mor_compact_norm_sec":-1,"mor_compact_rows_rewritten":-1,"partitioned_correction_sec":-1,"partitioned_correction_norm_sec":-1,"partitioned_rows_rewritten":-1,"partitioned_minor_sec":-1,"partitioned_minor_norm_sec":-1,"partitioned_minor_rows":-1},"sf":"/data/sf0.01"}"""
+  private val fixtureSummary =
+    """{"metric":"total","value":0.463,"unit":"sec","n_queries":3,"n_failures":1,"cpus":4,"default_parallelism":4,"shuffle_partitions":4,"controls":{"start":2.500,"mid":2.413,"end":2.610},"control_sec":2.500,"control_set":2,"control_ratio":1.046,"confirmed":[],"sf":"/data/sf0.01"}"""
+
+  private def previous(line: String) = {
+    val f = Files.createTempFile("bench-prev", ".json")
+    try { Files.writeString(f, line + "\n"); Bench.previousRun(f.toString) }
+    finally Files.delete(f)
+  }
+
+  test("the previous-run reader returns the query map and control seconds of a recorded line") {
+    val (times, controlSec) = previous(fixtureLine)
+    assert(times == Map("p6_aqi_banding" -> -1.0, "q1_agg" -> 0.313, "s5_point_lookup" -> 0.15))
+    assert(controlSec == Some(2.5))
+    // another control set's seconds are incomparable; the times still count
+    val (times2, other) = previous(fixtureLine.replace("\"control_set\":2", "\"control_set\":1"))
+    assert(times2 == times && other.isEmpty)
+    // absent or unreadable files give nothing
+    assert(Bench.previousRun("/nonexistent/BENCH_LAST.json") == ((Map.empty, None)))
+    assert(previous(fixtureLine.take(40)) == ((Map.empty, None)))
+  }
+
+  test("the record writer reproduces the recorded line and summary byte for byte") {
+    val record = Bench.Record(
+      results = Map("q1_agg" -> 0.3134, "p6_aqi_banding" -> -1.0, "s5_point_lookup" -> 0.15),
+      failures = Set("p6_aqi_banding"), solo = Map("q1_agg" -> 0.3012),
+      cpus = 4, defaultParallelism = 4, shufflePartitions = 4,
+      controls = Seq(2.5004, 2.4126, 2.61), controlSec = 2.5004, controlRatio = 1.0456,
+      regressions = Nil, merge5m = Some(Bench.merge5mBlock(sys.error("scenario failed"), 1.0456)), sf = "/data/sf0.01")
+    assert(Bench.lines(record) == ((fixtureLine, fixtureSummary)))
+    // the sf path is a JSON string, not raw text: quotes and backslashes survive
+    val odd = """C:\data\"sf"\0.01"""
+    val (line, _) = Bench.lines(record.copy(sf = odd))
+    assert((parse(line) \ "sf") == JString(odd))
+  }
+
+  test("the merge5m success and failure blocks carry the same keys in the same order") {
+    def keys(o: JObject) = o.obj.map(_._1)
+    val measured = MergeCrossoverBench.metricNames.map(_ -> 1.5)
+    val ok = Bench.merge5mBlock(measured, controlRatio = 1.2)
+    assert(keys(ok) == keys(Bench.merge5mBlock(sys.error("scenario failed"), controlRatio = 1.2)))
+    assert(keys(ok).head == "control_ratio" && keys(ok).size == 23)
+    // each seconds metric is followed by its ratio-normalized twin
+    assert((ok \ "flat_delta_sec").values == BigDecimal("1.500"))
+    assert((ok \ "flat_delta_norm_sec").values == BigDecimal("1.250"))
+    assert((ok \ "rows_rewritten").values == BigInt(1))
+  }
+
+  test("oracle_sql.json round-trips quotes, backslashes, control characters and non-ASCII text") {
+    val sql = Map(
+      "q_quote" -> "SELECT 'a\"b' AS \"x\"",
+      "q_backslash" -> "SELECT '\\d+' AS re",
+      "q_ws" -> "SELECT\t1\r\n FROM t",
+      "q_ctl" -> "SELECT '\u0001' AS c",
+      "q_text" -> "SELECT 'Zürich — 東京 ✓' AS city")
+    val back = parse(Verify.oracleJson(sql)) match {
+      case JObject(fields) => fields.map { case (k, JString(v)) => k -> v; case f => fail(s"$f") }.toMap
+      case other => fail(s"$other")
+    }
+    assert(back == sql)
+  }
+
+  test("SPARK_GRAFT_QUERIES selection fails fast on unknown or empty names") {
+    val registry = Map("q1_agg" -> 1, "p6_aqi_banding" -> 2, "graph_sssp" -> 3)
+    assert(Bench.selectQueries(registry, None) == registry)
+    assert(Bench.selectQueries(registry, Some(" q1_agg, graph_sssp ,")) ==
+      Map("q1_agg" -> 1, "graph_sssp" -> 3))
+    val e = intercept[IllegalArgumentException](
+      Bench.selectQueries(registry, Some("q1_agg,q1_agx,zz_typo")))
+    assert(e.getMessage.contains("unknown queries: q1_agx, zz_typo"))
+    intercept[IllegalArgumentException](Bench.selectQueries(registry, Some(" , ")))
   }
 }

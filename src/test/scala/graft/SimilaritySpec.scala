@@ -779,6 +779,38 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert(run(emb.repartition(5)) == out)
   }
 
+  test("vectorSecondMoments: non-finite or oversized components fail with the input contract") {
+    val s = spark; import s.implicits._
+    def failure(v: Array[Double]): Throwable = {
+      val emb = Seq((0, Array(0.5, -1.0)), (1, v)).toDF("vec_id", "embedding")
+      val e = intercept[Exception](Similarity.vectorSecondMoments(emb).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .find(_.isInstanceOf[IllegalArgumentException]).getOrElse(e)
+    }
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 129.0, -1e300)) {
+      val t = failure(Array(0.25, bad))
+      assert(t.isInstanceOf[IllegalArgumentException], s"$bad: $t")
+      assert(t.getMessage.contains("must be finite with |x|·2^24 ≤ 2^31"), s"$bad: ${t.getMessage}")
+    }
+    // the bound itself is inside the contract: 128 · 2^24 = 2^31, and
+    // its square is summed exactly
+    val edge = Seq((0, Array(128.0))).toDF("vec_id", "embedding")
+    assert(Similarity.vectorSecondMoments(edge).collect().map(_.getString(3)).toSeq ==
+      Seq((BigInt(2).pow(62)).toString))
+  }
+
+  test("vectorSecondMoments: a null array element counts as 0.0") {
+    // the Seq[Double] input encoder unboxes a null element to 0.0: the
+    // row still counts toward every cell of that position
+    val s = spark; import s.implicits._
+    def run(v: Seq[java.lang.Double]) =
+      Similarity.vectorSecondMoments(Seq((0, v)).toDF("vec_id", "embedding"))
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getString(3))).toSet
+    val withNull = run(Seq(0.5, null))
+    assert(withNull == run(Seq(0.5, 0.0)))
+    assert(withNull.contains((1, 1, 1L, "0")))
+  }
+
   test("annEvalMetrics reports per-query recall@k and RR in integer ppm") {
     val s = spark; import s.implicits._
     val rnd = new scala.util.Random(5)
