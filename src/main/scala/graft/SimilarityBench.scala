@@ -7,8 +7,8 @@ import org.json4s.jackson.JsonMethods.compact
 import graft.Bench.timed
 import graft.operators.{Caches, Similarity}
 
-/** Vector-search throughput + recall benchmark — the ANN analog of
-  * [[DedupBench]]: synthesizes a CLUSTERED embedding corpus (vectors
+/** Vector-search throughput + recall benchmark: synthesizes a
+  * CLUSTERED embedding corpus (vectors
   * concentrate around seeded directions, the regime IVF exists for),
   * times the search tiers, and measures recall@k against the exact
   * brute-force ranking of the same queries. One JSON line; BASELINE.md

@@ -3,7 +3,7 @@ package graft.aqi
 import java.sql.Timestamp
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
 
 import graft.sources.Warehouse
@@ -12,13 +12,15 @@ import graft.sources.Warehouse
   * (`main.py:8-85`, SURVEY §2.6):
   *
   *   source_to_stage (two independent loads)  ≫  stage_to_nds
-  *     stage-AQI:  set_cet → truncate+load(window) → set_lset   (O3)
+  *     stage-AQI:  set_cet → truncate+load(window)             (O3)
   *     stage-counties: full reload, no watermark                (O4)
   *   NDS strict order: states → counties → measurements         (O5)
+  *   set_lset, once measurement_nds has committed
   *
-  * LSET advances only after a successful stage load, so a failed run
-  * re-extracts the same window (at-least-once); all merges are
-  * idempotent under redelivery (only `last_updated_nds` moves).
+  * LSET advances only after the last NDS write, so a run that fails at
+  * any write re-extracts the same window on its retry and no staged row
+  * is lost (at-least-once); all merges are idempotent under redelivery
+  * (only the NDS audit timestamps move).
   * Airflow-level scheduling stays out of engine scope; this object is
   * the in-engine equivalent of one DAG run.
   */
@@ -42,19 +44,35 @@ object Pipeline {
       sourceDir: String,
       warehouseDir: String,
       now: Instant = Instant.now(),
-      partitionedFacts: Boolean = false): Unit = {
+      partitionedFacts: Boolean = false): Unit =
+    runWith(spark, sourceDir, warehouseDir, now, partitionedFacts, _ => ())
+
+  /** [[run]], calling `beforeWrite(table)` before each of its seven
+    * table writes (metadata, the two stage tables, the three NDS
+    * tables, metadata again): the seam the retry spec fails a run at.
+    */
+  private[aqi] def runWith(
+      spark: SparkSession,
+      sourceDir: String,
+      warehouseDir: String,
+      now: Instant,
+      partitionedFacts: Boolean,
+      beforeWrite: String => Unit): Unit = {
     val ts = Timestamp.from(now)
     val nowCol = lit(ts)
+    def write(df: DataFrame, table: String): Unit = {
+      beforeWrite(table)
+      Warehouse.overwrite(df, warehouseDir, table)
+    }
 
     // —— source→stage: AQI (windowed, watermarked) ——
+    beforeWrite(Watermarks.TableName)
     Watermarks.setCet(spark, warehouseDir, StateAqiStage, ts)
     val (cet, lset) = Watermarks.getWindow(spark, warehouseDir, StateAqiStage)
-    Warehouse.overwrite(Staging.stageAqi(spark, sourceDir, lset, cet),
-      warehouseDir, StateAqiStage) // S8 truncate+reload
-    Watermarks.setLset(spark, warehouseDir, StateAqiStage, ts) // only after success
+    write(Staging.stageAqi(spark, sourceDir, lset, cet), StateAqiStage) // S8 truncate+reload
 
     // —— source→stage: counties (full reload) ——
-    Warehouse.overwrite(Staging.stageCounties(spark, sourceDir), warehouseDir, UsCountiesStage)
+    write(Staging.stageCounties(spark, sourceDir), UsCountiesStage)
 
     // —— stage→NDS (strict order: FK surrogate resolution) ——
     val aqiStage = Warehouse.read(spark, warehouseDir, StateAqiStage)
@@ -63,23 +81,29 @@ object Pipeline {
     val states = Nds.mergeStates(
       Warehouse.readOrEmpty(spark, warehouseDir, StateNdsT, Schemas.stateNds),
       countiesStage, aqiStage, nowCol)
-    Warehouse.overwrite(states, warehouseDir, StateNdsT)
+    write(states, StateNdsT)
 
     val stateNds = Warehouse.read(spark, warehouseDir, StateNdsT)
     val counties = Nds.mergeCounties(spark,
       Warehouse.readOrEmpty(spark, warehouseDir, CountyNdsT, Schemas.countyNds),
       stateNds, countiesStage, aqiStage, nowCol)
-    Warehouse.overwrite(counties, warehouseDir, CountyNdsT)
+    write(counties, CountyNdsT)
 
     val countyNds = Warehouse.read(spark, warehouseDir, CountyNdsT)
     if (partitionedFacts) {
+      beforeWrite(MeasurementNdsT)
       Nds.mergeMeasurementsPartitioned(spark, warehouseDir, stateNds, countyNds,
         aqiStage, nowCol, MeasurementNdsT)
     } else {
       val measurements = Nds.mergeMeasurements(
         Warehouse.readOrEmpty(spark, warehouseDir, MeasurementNdsT, Schemas.measurementNds),
         stateNds, countyNds, aqiStage, nowCol)
-      Warehouse.overwrite(measurements, warehouseDir, MeasurementNdsT)
+      write(measurements, MeasurementNdsT)
     }
+
+    // only now is the window in the NDS: a failure above leaves LSET
+    // where it was, and the retry extracts this window again
+    beforeWrite(Watermarks.TableName)
+    Watermarks.setLset(spark, warehouseDir, StateAqiStage, ts)
   }
 }

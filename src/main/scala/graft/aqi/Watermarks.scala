@@ -11,9 +11,11 @@ import graft.sources.Warehouse
 /** CET/LSET watermark manager — the reference's `metadata` table
   * protocol (`source_to_stage.py:9-26,37-45`): CET (Current Extraction
   * Time) is stamped before a stage load, LSET (Last Successful
-  * Extraction Time) only after the load commits, so a failed run
-  * re-extracts the same closed window on retry (at-least-once,
-  * SURVEY §2.6 O3). Stored as a single small parquet table.
+  * Extraction Time) only after the window has reached the NDS —
+  * [[Pipeline.run]] sets it after the `measurement_nds` write — so a run
+  * that fails at any write re-extracts the same closed window on retry
+  * and loses no row (at-least-once, SURVEY §2.6 O3). Stored as a single
+  * small parquet table.
   */
 object Watermarks {
 

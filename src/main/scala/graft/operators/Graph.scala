@@ -465,12 +465,16 @@ object Graph {
         .select(cols: _*))
     // re-extend: (node -> movedNode paths) x (newParent -> anc paths),
     // +1 for the new edge; an explicit bounded product of two
-    // metadata-sized sets (subtree rows to m, new parent's ancestry)
+    // metadata-sized sets (subtree rows to m, new parent's ancestry).
+    // The ancestry, one row per ancestor path, is broadcast: the
+    // product then runs one task per partition of the subtree side,
+    // where a cartesian of two closure filters runs one per partition
+    // PAIR
     val toM = closure.where(col("anc") === m)
       .select(col("node"), col("depth").as("__d"))
     val up = closure.where(col("node") === np)
       .select(col("anc"), col("depth").as("__d2"))
-    val rerouted = toM.crossJoin(up)
+    val rerouted = toM.crossJoin(broadcast(up))
       .select(col("node"), col("anc"), (col("__d") + 1L + col("__d2")).as("depth"))
     kept.unionByName(rerouted)
   }

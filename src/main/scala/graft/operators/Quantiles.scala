@@ -139,13 +139,17 @@ object Quantiles {
     * so every bin holds ~1/nBins of the data regardless of the value
     * distribution (uniform-width bins collapse under skew).
     *
-    * Cutoffs come from `percentile_disc` — ACTUAL data values, no
-    * interpolation — and the bin id is the exact count of cutoffs
-    * strictly below the value, so the assignment is reproducible on
-    * any engine given the same cutoffs. For cross-engine gates use a
+    * Cutoffs are ACTUAL data values, no interpolation: cutoff i is the
+    * smallest value whose running row count (a running sum over the
+    * distinct values in order) reaches i/nBins of the rows, tested as
+    * the integer cross-multiplication `cum·nBins ≥ n·i` — no float in
+    * the selection, and the value `percentile_disc(i/nBins)` returns.
+    * The bin id is the exact count of cutoffs strictly below the value,
+    * so the assignment is reproducible on any engine given the same
+    * cutoffs. For gates against a `percentile_disc` oracle use a
     * power-of-two `nBins`: the fractions i/nBins are then exact binary
-    * doubles and both engines compute identical rank positions (a
-    * fraction like 0.1 can straddle a rounding boundary in p·n).
+    * doubles and the oracle's rank positions match (a fraction like 0.1
+    * can straddle a rounding boundary in p·n).
     *
     * NULLs: like `percentile_disc`, the cutoffs ignore NULL values; NULL
     * rows still pass through, with bin 0.
@@ -162,14 +166,13 @@ object Quantiles {
       nBins: Int,
       binCol: String = "bin"): DataFrame = {
     require(nBins >= 2, "need at least 2 bins")
-    // the cutoffs are percentile_disc(i/nBins) — the smallest value
-    // whose cumulative row count reaches ceil(i·n/nBins) — computed as
-    // ONE combinable count aggregation over the DISTINCT value domain
-    // plus a domain-sized running sum, instead of nBins−1 separate
-    // percentile_disc aggregates (each of which buffers every row per
-    // cutoff). Ranks use the exact integer formula (i·n + nBins−1) div
-    // nBins = ceil(i·n/nBins), so the cut selection never touches a
-    // float and matches percentile_disc bit-for-bit.
+    // the cutoffs — the smallest value whose cumulative row count
+    // reaches ceil(i·n/nBins) — come from ONE combinable count
+    // aggregation over the DISTINCT value domain plus a domain-sized
+    // running sum, instead of nBins−1 separate percentile_disc
+    // aggregates (each of which buffers every row per cutoff). The
+    // rank test cum·nBins ≥ n·i is exact integer arithmetic, so the
+    // cut selection never touches a float.
     val w = org.apache.spark.sql.expressions.Window.orderBy(valueCol)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val cum = df.where(col(valueCol).isNotNull)

@@ -273,33 +273,14 @@ object MergeOnRead {
     throw last
   }
 
-  /** Atomic manifest commit: tmp file + rename-replace (the
+  /** Atomic manifest commit ([[Warehouse.replaceFile]], the
     * [[Warehouse.Pointer]] protocol — a reader sees the old or the new
     * manifest, never an absent or partial one). Commit ORDER against
     * concurrent writers is serialized by the delta-seq claims, not by
     * this rename.
     */
-  private def commit(spark: SparkSession, dir: String, table: String, m: Manifest): Unit = {
-    val fs = fsOf(spark, dir)
-    val ptr = manifestPath(dir, table)
-    val tmp = new Path(ptr.toString + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write((m.serialize + "\n").getBytes("UTF-8")) finally out.close()
-    if (fs.getScheme == "file") {
-      // RawLocalFs implements overwrite-rename as delete+rename — a
-      // reader-visible absent window; posix rename(2) replaces
-      // atomically
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp.toUri.getPath),
-        java.nio.file.Paths.get(ptr.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        ptr.toUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-  }
+  private def commit(spark: SparkSession, dir: String, table: String, m: Manifest): Unit =
+    Warehouse.replaceFile(spark, manifestPath(dir, table), m.serialize + "\n")
 
   /** Count rows of freshly-written parquet — a footer-statistics job
     * (no data pages read), how writers record [[Manifest.deltaRows]] /
@@ -586,27 +567,11 @@ object MergeOnRead {
 
   // ----------------------------------------------------------- claims
 
-  /** Take the create-exclusive claim for delta seq `seq`. On local
-    * filesystems this MUST be O_EXCL through nio —
-    * `FileSystem.createNewFile` is check-then-create there (two racers
-    * can both "win"); on HDFS the namenode serializes the
-    * overwrite=false create.
+  /** Take the create-exclusive claim for delta seq `seq`
+    * ([[Warehouse.createExclusive]]).
     */
-  private def tryClaim(spark: SparkSession, dir: String, table: String, seq: Long): Boolean = {
-    val fs = fsOf(spark, dir)
-    val p = claimPath(dir, table, seq)
-    fs.mkdirs(p.getParent)
-    if (fs.getScheme == "file") {
-      try { java.nio.file.Files.createFile(java.nio.file.Paths.get(p.toUri.getPath)); true }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case _: java.io.IOException => false
-      }
-    } else {
-      try fs.createNewFile(p)
-      catch { case _: java.io.IOException => false }
-    }
-  }
+  private def tryClaim(spark: SparkSession, dir: String, table: String, seq: Long): Boolean =
+    Warehouse.createExclusive(fsOf(spark, dir), claimPath(dir, table, seq))
 
   private def releaseClaim(spark: SparkSession, dir: String, table: String, seq: Long): Unit =
     fsOf(spark, dir).delete(claimPath(dir, table, seq), false)

@@ -306,6 +306,59 @@ object Warehouse {
   def rollback(spark: SparkSession, dir: String, table: String, version: Long, keepVersions: Int = 3): Unit =
     overwriteVersioned(readVersion(spark, dir, table, version), dir, table, keepVersions)
 
+  /** Replace the small file `target` with `content` atomically: write
+    * `<target>.tmp`, then rename it over `target`, so a reader sees the
+    * old or the new file, never an absent or partial one. The commit of
+    * [[Pointer]], [[Txn]] and [[MergeOnRead]]. On `file:` the rename is
+    * nio's posix rename(2): Hadoop's local overwrite-rename deletes the
+    * target first and moves its checksum file in a second step, windows
+    * in which the file is missing or fails its checksum. The target
+    * then carries no checksum file; one left by an earlier Hadoop
+    * rename is deleted first, so readers skip verification rather than
+    * fail it.
+    */
+  private[sources] def replaceFile(spark: SparkSession, target: Path, content: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = target.getFileSystem(conf)
+    val tmp = new Path(target.toString + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+    if (fs.getScheme == "file") {
+      fs match {
+        case c: org.apache.hadoop.fs.ChecksumFileSystem =>
+          c.getRawFileSystem.delete(c.getChecksumFile(target), false)
+        case _ =>
+      }
+      java.nio.file.Files.move(
+        java.nio.file.Paths.get(tmp.toUri.getPath),
+        java.nio.file.Paths.get(target.toUri.getPath),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } else
+      org.apache.hadoop.fs.FileContext.getFileContext(target.toUri, conf)
+        .rename(tmp, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+  }
+
+  /** Create `p` only if absent; true when this call created it — the
+    * writers' claim. On local filesystems this must be O_EXCL through
+    * nio (`FileSystem.createNewFile` is check-then-create there, so two
+    * racers can both "win"); on HDFS the namenode serializes the
+    * overwrite=false create.
+    */
+  private[sources] def createExclusive(fs: org.apache.hadoop.fs.FileSystem, p: Path): Boolean = {
+    fs.mkdirs(p.getParent)
+    if (fs.getScheme == "file") {
+      try { java.nio.file.Files.createFile(java.nio.file.Paths.get(p.toUri.getPath)); true }
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException => false
+        case _: java.io.IOException => false
+      }
+    } else {
+      try fs.createNewFile(p)
+      catch { case _: java.io.IOException => false }
+    }
+  }
+
   // ------------------------------------------------------ pointer commits
 
   /** Pointer-committed tables — the always-consistent-readers upgrade
@@ -398,19 +451,11 @@ object Warehouse {
       val orphans = gens.filter(g => prev.forall(_ < g))
       val next = gens.lastOption.getOrElse(0L) + 1
       df.write.mode("overwrite").parquet(new Path(dd, next.toString).toString)
-      // the commit: tmp pointer file + rename over the live pointer
-      // (rename-replace of a FILE is atomic on posix and HDFS)
-      val ptr = ptrPath(dir, table)
-      val tmp = new Path(ptr.toString + ".tmp")
-      val out = fs.create(tmp, true)
-      val line = if (stamp >= 0) s"$next;batch=$stamp\n" else s"$next\n"
-      try out.write(line.getBytes("UTF-8")) finally out.close()
-      // atomic REPLACE (posix rename / HDFS overwrite-rename): at every
-      // instant the pointer file exists and is complete — readers see
-      // either the old or the new generation, never an absent table
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        ptr.toUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      // the commit: at every instant the pointer file exists and is
+      // complete — readers see the old or the new generation, never an
+      // absent table
+      replaceFile(spark, ptrPath(dir, table),
+        if (stamp >= 0) s"$next;batch=$stamp\n" else s"$next\n")
       // prune: crashed-writer orphans always; committed history beyond
       // the newest keepGenerations (covers in-flight readers that
       // resolved the pointer just before this commit)
@@ -499,26 +544,6 @@ object Warehouse {
       new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     private val SafeName = "[A-Za-z0-9._-]+".r
-
-    /** Create-exclusive claim on txn id `txn` — the same O_EXCL
-      * discipline as the merge-on-read delta claims (nio on local
-      * filesystems, namenode-serialized create on HDFS).
-      */
-    private def tryClaim(fs: org.apache.hadoop.fs.FileSystem,
-        dir: String, name: String, txn: Long): Boolean = {
-      val p = claimPath(dir, name, txn)
-      fs.mkdirs(p.getParent)
-      if (fs.getScheme == "file") {
-        try { java.nio.file.Files.createFile(java.nio.file.Paths.get(p.toUri.getPath)); true }
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-          case _: java.io.IOException => false
-        }
-      } else {
-        try fs.createNewFile(p)
-        catch { case _: java.io.IOException => false }
-      }
-    }
 
     /** Delete claims beyond the committed txn id — only safe after
       * confirming no writer is live (a claim past the root is either a
@@ -640,7 +665,7 @@ object Warehouse {
           s"txn group $name is at txn ${prev.map(_.txn).getOrElse(-1L)}, expected $expectedTxn " +
             "— a concurrent or replayed commit; re-read and retry")
       val txnId = prev.map(_.txn).getOrElse(0L) + 1
-      if (!tryClaim(fs, dir, name, txnId))
+      if (!createExclusive(fs, claimPath(dir, name, txnId)))
         throw new MergeOnRead.ConcurrentWriterException(
           s"txn group $name: txn $txnId is claimed — a concurrent writer is mid-commit " +
             "(re-read and retry after it finishes) or crashed (releaseStaleClaims after " +
@@ -675,21 +700,7 @@ object Warehouse {
           (if (lastBatch >= 0) s";batch=$lastBatch" else "") +
           ";tables=" +
           newGens.toSeq.sortBy(_._1).map { case (t, g) => s"$t:$g" }.mkString(",")
-        val ptr = rootPath(dir, name)
-        val tmp = new Path(ptr.toString + ".tmp")
-        val out = fs.create(tmp, true)
-        try out.write((line + "\n").getBytes("UTF-8")) finally out.close()
-        if (fs.getScheme == "file")
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(tmp.toUri.getPath),
-            java.nio.file.Paths.get(ptr.toUri.getPath),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        else {
-          val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-            ptr.toUri, spark.sparkContext.hadoopConfiguration)
-          fc.rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        }
+        replaceFile(spark, rootPath(dir, name), line + "\n")
         // prune: every table directory not referenced by THIS or the
         // PREVIOUS snapshot (one-commit reader grace) goes — that covers
         // crashed-writer orphans and history beyond the grace window

@@ -639,6 +639,33 @@ class StreamsSpec extends AnyFunSuite with SparkTest {
       val old = inFlight.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(old == Map(1L -> "a", 2L -> "b"))
     } finally q.stop()
+
+    // a reader polling the pointer across 100 commits never finds it
+    // missing or unreadable: each commit replaces the file in one rename.
+    // The pointer starts out as an older commit protocol left it, with a
+    // checksum file beside it
+    val ptr = new org.apache.hadoop.fs.Path(s"$wh/t.ptr")
+    val fs = ptr.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val line = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$wh/t.ptr")), "UTF-8")
+    val out = fs.create(ptr, true)
+    try out.write(line.getBytes("UTF-8")) finally out.close()
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$wh/.t.ptr.crc")))
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val missing = new java.util.concurrent.atomic.AtomicInteger(0)
+    val polls = new java.util.concurrent.atomic.AtomicLong(0)
+    val reader = new Thread(() =>
+      while (!stop.get) {
+        try {
+          if (graft.sources.Warehouse.Pointer.currentGeneration(s, wh, "t").isEmpty)
+            missing.incrementAndGet()
+        } catch { case _: Exception => missing.incrementAndGet() }
+        polls.incrementAndGet()
+      })
+    reader.start()
+    val row = Seq((1L, "a")).toDF("k", "v")
+    try (1 to 100).foreach(_ => graft.sources.Warehouse.Pointer.overwrite(row, wh, "t"))
+    finally { stop.set(true); reader.join() }
+    assert(missing.get == 0, s"${missing.get} of ${polls.get} polls found no committed pointer")
   }
 
   test("foldUpsertPointerBatch stamp skips a poisoned replay; out-of-band commit keeps the stamp") {

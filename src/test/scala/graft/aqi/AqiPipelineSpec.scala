@@ -189,4 +189,88 @@ class AqiPipelineSpec extends AnyFunSuite with SparkTest {
     assert(day2 == day1 ++ Map(
       ("Alameda", "Connecticut") -> 5L, ("Aardvark", "Connecticut") -> 6L))
   }
+
+  // —— a run that fails part-way: the retry must land every row of the
+  // failed run's window, at whichever of the run's seven writes it
+  // failed. Day 1 loads the insert fixture; the day-2 window adds a
+  // J6 county, an AQI-only state and a re-delivered measurement with a
+  // new value. ——
+
+  private val day2Aqi = Seq(
+    aqiRow("Connecticut", "Aardvark", 9, 43, "site-aa", "2026-01-01"), // J6
+    aqiRow("Nevada", "Clark", 32, 44, "site-nv", "2026-01-01"), // new state, J7
+    // same business key as day 1's site-ct row, updated inside the window
+    "Connecticut,Windham,9,1,1999-01-01,99,Bogus,Ozone,site-ct,5," +
+      "2021-07-01 10:00:00,2026-01-01 12:00:00")
+  private val day2 = Instant.parse("2026-01-02T00:00:00Z")
+
+  /** A warehouse after the day-1 run, and the day-2 sources; each call
+    * copies the day-1 warehouse built once.
+    */
+  private lazy val day1 = {
+    val src = Files.createTempDirectory("aqi-src-retry")
+    val wh = Files.createTempDirectory("aqi-wh-retry")
+    writeInsertFixture(src, ctDim, insertAqi)
+    Pipeline.run(spark, src.toString, wh.toString, Instant.parse("2026-01-01T00:00:00Z"))
+    writeInsertFixture(src, ctDim, day2Aqi, aqiFile = "10_state_aqi_2026.csv")
+    (src.toString, wh)
+  }
+  private def day1Copy(): String = {
+    val to = Files.createTempDirectory("aqi-wh-retry-copy")
+    val from = day1._2
+    Files.walk(from).forEach { p =>
+      if (p != from) Files.copy(p, to.resolve(from.relativize(p).toString))
+    }
+    to.toString
+  }
+
+  /** The NDS tables' rows, leaving out the audit stamps a retried merge
+    * moves (as the reference's task retry does).
+    */
+  private def ndsRows(wh: String): Seq[Seq[String]] =
+    Seq(Pipeline.StateNdsT, Pipeline.CountyNdsT, Pipeline.MeasurementNdsT).map { t =>
+      Warehouse.read(spark, wh, t)
+        .drop("created_date_nds", "last_updated_nds", "last_updated")
+        .collect().map(_.toString).toSeq.sorted
+    }
+
+  /** The run's seven writes, in order, each with a label. */
+  private val writes = Seq("metadata (CET)" -> Watermarks.TableName,
+    Pipeline.StateAqiStage -> Pipeline.StateAqiStage,
+    Pipeline.UsCountiesStage -> Pipeline.UsCountiesStage,
+    Pipeline.StateNdsT -> Pipeline.StateNdsT,
+    Pipeline.CountyNdsT -> Pipeline.CountyNdsT,
+    Pipeline.MeasurementNdsT -> Pipeline.MeasurementNdsT,
+    "metadata (LSET)" -> Watermarks.TableName)
+
+  /** The day-2 run without a failure: its NDS rows and its writes. */
+  private lazy val uninterrupted = {
+    val wh = day1Copy()
+    val seen = Seq.newBuilder[String]
+    Pipeline.runWith(spark, day1._1, wh, day2, partitionedFacts = false, seen += _)
+    (ndsRows(wh), seen.result())
+  }
+
+  test("a run makes its seven writes in order, LSET last") {
+    assert(uninterrupted._2 == writes.map(_._2))
+  }
+
+  for (((label, table), k) <- writes.zipWithIndex)
+    test(s"a run failing at its $label write loses no row on retry") {
+      val wh = day1Copy()
+      // fail before the nth write of `table`, passing its earlier ones
+      val nth = writes.take(k + 1).count(_._2 == table)
+      var n = 0
+      intercept[IllegalStateException] {
+        Pipeline.runWith(spark, day1._1, wh, day2, partitionedFacts = false, t =>
+          if (t == table) {
+            n += 1
+            if (n == nth) throw new IllegalStateException(s"injected before $label")
+          })
+      }
+      Pipeline.run(spark, day1._1, wh, Instant.parse("2026-01-03T00:00:00Z"))
+      val retried = ndsRows(wh)
+      assert(retried == uninterrupted._1)
+      assert(retried(2).exists(_.contains("site-aa")) && retried(2).exists(_.contains(",99,")))
+    }
 }
