@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The driver contract: every gate name is distinct, every query runs
-  * at smoke scale, and the flagship entry returns rows. Catches a
-  * renamed/removed query before the driver's gate does.
+/** The driver contract: every gate name is distinct, every oracle SQL
+  * entry pairs with a query, every query runs at smoke scale, and the
+  * flagship entry returns rows. Catches a renamed/removed query before
+  * the driver's gate does.
   */
 class ContractSpec extends AnyFunSuite with SparkTest {
 
@@ -20,6 +21,19 @@ class ContractSpec extends AnyFunSuite with SparkTest {
     assert(names.size == 460)
     assert(SparkEntry.queries.size == names.size)
     assert(SparkEntry.oracleSql.size == names.size)
+  }
+
+  test("every oracleSql key has a matching queries entry") {
+    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")
+  }
+
+  test("every query has an oracle — no rows-only entries") {
+    // every operator, including the hash-seeded ones, has a full DuckDB
+    // replay; a query without one (or with blank SQL) would silently
+    // downgrade the driver's check to rows-only
+    val unoracled = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    assert(unoracled.isEmpty, s"queries without oracle SQL: $unoracled")
     assert(SparkEntry.oracleSql.forall(_._2.trim.nonEmpty), "a gate with blank oracle SQL")
   }
 
