@@ -941,7 +941,10 @@ object SparkEntry {
       new Gate(name, query, sql)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** Built once per JVM: a lookup is then a map probe, not a rebuild of
+    * every gate. Holds only the query closures, no oracle string.
+    */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     gates.map(g => g.name -> g.query).toMap
 
   def oracleSql: Map[String, String] = gates.map(g => g.name -> g.oracle).toMap

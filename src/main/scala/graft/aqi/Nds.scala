@@ -2,7 +2,7 @@ package graft.aqi
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 
 import graft.operators.{Merge, MergeSpec}
 
@@ -10,9 +10,11 @@ import graft.operators.{Merge, MergeSpec}
   *
   * Each reference merge probes the target row-at-a-time (1–2 Postgres
   * round trips per row); here each becomes ONE full-outer join on the
-  * merge key + column resolution (graft.operators.Merge), so the whole
-  * NDS refresh is three shuffle stages. The dims (`state_nds` ≤ 51 rows,
-  * `county_nds` ~3.2k) broadcast automatically under AQE.
+  * merge key + column resolution (graft.operators.Merge). Spark never
+  * broadcasts a full outer join, so each merge, the dims' included
+  * (`state_nds` ≤ 51 rows, `county_nds` ~3.2k), plans a `SortMergeJoin
+  * FullOuter` that shuffles target and source on the merge key; only
+  * the inner lookups into the dims broadcast.
   *
   * Determinism policy (SURVEY §7 "what's hard"): the reference's
   * `first()` probes and keep-first dedup inherit pandas row order; this
@@ -47,18 +49,20 @@ object Nds {
       skCol: String,
       orderBy: Seq[String],
       maxOverride: Option[Long] = None): DataFrame = {
-    // materialize the merge output once: it is referenced three times
-    // below (the max/count aggregate, existing branch, inserted branch)
-    // — without the barrier each reference re-executes the whole
-    // upstream merge plan. The checkpoint is at most the merged table
-    // slice the caller is about to write anyway.
-    val mat = df.localCheckpoint(true)
+    // materialize the merge output once: both branches below (existing,
+    // inserted) read it, and without the barrier each would re-execute
+    // the whole upstream merge plan. The checkpoint job also observes
+    // the max key and the insert count, so no second job aggregates it.
+    // The checkpoint is at most the merged table slice the caller is
+    // about to write anyway.
+    val stats = Observation()
+    val mat = df.observe(stats,
+      coalesce(max(col(skCol)), lit(0L)).as("max"),
+      count(when(col(skCol).isNull, 1)).as("inserted")).localCheckpoint(true)
     val existing = mat.filter(col(skCol).isNotNull)
     val inserted = mat.filter(col(skCol).isNull)
-    val stats = mat.agg(coalesce(max(col(skCol)), lit(0L)),
-      count(when(col(skCol).isNull, 1))).head()
-    val mx = maxOverride.getOrElse(stats.getLong(0))
-    val insertedCnt = stats.getLong(1)
+    val mx = maxOverride.getOrElse(stats.get("max").asInstanceOf[Long])
+    val insertedCnt = stats.get("inserted").asInstanceOf[Long]
     val keyed =
       if (insertedCnt <= SurrogateWindowMax)
         inserted.withColumn(skCol,
@@ -131,7 +135,7 @@ object Nds {
       .select("county_name", "county_fips", "state_name", "county_fullname",
         "latitude", "longitude", "county_population")
       .distinct()
-      .join(broadcast(stateNds.select("state_id_sk", "state_name").distinct()),
+      .join(broadcast(stateNds.select("state_id_sk", "state_name")),
         Seq("state_name"), "inner")
       .withColumn("source_id", lit(1))
       .drop("state_name")
@@ -166,22 +170,24 @@ object Nds {
 
   /** The measurement merge source: dims flatten (J3) → measurements ⋈
     * dims on the composite natural key (J4) → keep-first dedup on the
-    * business key (A6; deterministic survivor).
+    * business key (A6; deterministic survivor). No `distinct()` anywhere:
+    * the dim projections keep their unique surrogate keys, and exact
+    * duplicate stage rows leave the same survivor. The window partitions
+    * like the merge's join keys, so the merge reuses its shuffle.
     */
   private def measurementSource(
       stateNds: DataFrame,
       countyNds: DataFrame,
       aqiStage: DataFrame): DataFrame = {
-    val dims = stateNds.select("state_id_sk", "state_name").distinct()
-      .join(countyNds.select("county_id_sk", "state_id_sk", "county_name").distinct(),
+    val dims = stateNds.select("state_id_sk", "state_name")
+      .join(countyNds.select("county_id_sk", "state_id_sk", "county_name"),
         Seq("state_id_sk"), "inner")
     val stage = aqiStage.select(
       "county_name", "state_name", "measured_date", "aqi_value", "aqi_category",
       "defining_parameter", "defining_site", "num_of_sites_reporting",
-      "created", "last_updated").distinct()
+      "created", "last_updated")
     val joined = stage.join(broadcast(dims), Seq("state_name", "county_name"), "inner")
-    val keys = Seq("measured_date", "defining_parameter", "defining_site")
-    val w = Window.partitionBy(keys.map(col): _*)
+    val w = Window.partitionBy(measurementSpec.keys.map(col): _*)
       .orderBy(col("created"), col("last_updated"), col("county_id_sk"), col("aqi_value"))
     joined
       .withColumn("__rn", row_number().over(w))

@@ -5,6 +5,7 @@ import java.time.Instant
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.Warehouse
 
@@ -65,39 +66,39 @@ object Pipeline {
       Warehouse.overwrite(df, warehouseDir, table)
     }
 
+    // every read declares its table's schema: no inference job
+    def read(table: String, schema: StructType): DataFrame =
+      Warehouse.readOrEmpty(spark, warehouseDir, table, schema)
+
     // —— source→stage: AQI (windowed, watermarked) ——
     beforeWrite(Watermarks.TableName)
-    Watermarks.setCet(spark, warehouseDir, StateAqiStage, ts)
-    val (cet, lset) = Watermarks.getWindow(spark, warehouseDir, StateAqiStage)
+    val (cet, lset) = Watermarks.setCet(spark, warehouseDir, StateAqiStage, ts)
     write(Staging.stageAqi(spark, sourceDir, lset, cet), StateAqiStage) // S8 truncate+reload
 
     // —— source→stage: counties (full reload) ——
     write(Staging.stageCounties(spark, sourceDir), UsCountiesStage)
 
     // —— stage→NDS (strict order: FK surrogate resolution) ——
-    val aqiStage = Warehouse.read(spark, warehouseDir, StateAqiStage)
-    val countiesStage = Warehouse.read(spark, warehouseDir, UsCountiesStage)
+    val aqiStage = read(StateAqiStage, Schemas.stateAqiStage)
+    val countiesStage = read(UsCountiesStage, Schemas.usCountiesStage)
 
     val states = Nds.mergeStates(
-      Warehouse.readOrEmpty(spark, warehouseDir, StateNdsT, Schemas.stateNds),
-      countiesStage, aqiStage, nowCol)
+      read(StateNdsT, Schemas.stateNds), countiesStage, aqiStage, nowCol)
     write(states, StateNdsT)
 
-    val stateNds = Warehouse.read(spark, warehouseDir, StateNdsT)
+    val stateNds = read(StateNdsT, Schemas.stateNds)
     val counties = Nds.mergeCounties(spark,
-      Warehouse.readOrEmpty(spark, warehouseDir, CountyNdsT, Schemas.countyNds),
-      stateNds, countiesStage, aqiStage, nowCol)
+      read(CountyNdsT, Schemas.countyNds), stateNds, countiesStage, aqiStage, nowCol)
     write(counties, CountyNdsT)
 
-    val countyNds = Warehouse.read(spark, warehouseDir, CountyNdsT)
+    val countyNds = read(CountyNdsT, Schemas.countyNds)
     if (partitionedFacts) {
       beforeWrite(MeasurementNdsT)
       Nds.mergeMeasurementsPartitioned(spark, warehouseDir, stateNds, countyNds,
         aqiStage, nowCol, MeasurementNdsT)
     } else {
       val measurements = Nds.mergeMeasurements(
-        Warehouse.readOrEmpty(spark, warehouseDir, MeasurementNdsT, Schemas.measurementNds),
-        stateNds, countyNds, aqiStage, nowCol)
+        read(MeasurementNdsT, Schemas.measurementNds), stateNds, countyNds, aqiStage, nowCol)
       write(measurements, MeasurementNdsT)
     }
 

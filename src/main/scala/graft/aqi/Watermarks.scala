@@ -27,22 +27,23 @@ object Watermarks {
   private def readAll(spark: SparkSession, dir: String) =
     Warehouse.readOrEmpty(spark, dir, TableName, Schemas.metadata)
 
+  /** A stored (table_name, cet, lset) row as its window; a NULL stamp
+    * reads as the epoch.
+    */
+  private def window(r: Row): (Timestamp, Timestamp) =
+    (Option(r.getTimestamp(1)).getOrElse(epoch), Option(r.getTimestamp(2)).getOrElse(epoch))
+
   /** Read (cet, lset) for a staged table, bootstrapping a row if absent. */
-  def getWindow(spark: SparkSession, dir: String, table: String): (Timestamp, Timestamp) = {
-    val rows = readAll(spark, dir)
+  def getWindow(spark: SparkSession, dir: String, table: String): (Timestamp, Timestamp) =
+    readAll(spark, dir)
       .filter(col("table_name") === table)
       .collect()
-    rows.headOption match {
-      case Some(r) =>
-        (Option(r.getAs[Timestamp]("cet")).getOrElse(epoch),
-          Option(r.getAs[Timestamp]("lset")).getOrElse(epoch))
-      case None => (epoch, epoch)
-    }
-  }
+      .headOption.map(window).getOrElse((epoch, epoch))
 
+  /** Write `value` into `table`'s `colName` stamp; returns the row written. */
   private def setColumn(
       spark: SparkSession, dir: String, table: String,
-      colName: String, value: Timestamp): Unit = {
+      colName: String, value: Timestamp): Row = {
     val (mine, others) = readAll(spark, dir).collect().toSeq
       .partition(_.getAs[String]("table_name") == table)
     val existing = mine.headOption
@@ -56,10 +57,14 @@ object Watermarks {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(others :+ updated, 1), Schemas.metadata)
     Warehouse.overwrite(df, dir, TableName)
+    updated
   }
 
-  def setCet(spark: SparkSession, dir: String, table: String, now: Timestamp): Unit =
-    setColumn(spark, dir, table, "cet", now)
+  /** Stamp CET and return the (cet, lset) window just written, the one
+    * [[getWindow]] would read back.
+    */
+  def setCet(spark: SparkSession, dir: String, table: String, now: Timestamp): (Timestamp, Timestamp) =
+    window(setColumn(spark, dir, table, "cet", now))
 
   def setLset(spark: SparkSession, dir: String, table: String, now: Timestamp): Unit =
     setColumn(spark, dir, table, "lset", now)

@@ -51,11 +51,15 @@ object Warehouse {
     spark.read.parquet(path(dir, table))
   }
 
-  /** Read the table, or an empty DataFrame with the given schema when the
-    * table does not exist yet (first pipeline run).
+  /** Read the table with `schema` declared, or an empty DataFrame with
+    * that schema when the table does not exist yet (first pipeline run).
+    * A declared schema saves the footer-reading job that inferring it
+    * costs, but parquet binds columns by name, so a declared column the
+    * files lack reads as NULL: `schema` must be the table's stored schema
+    * (for the AQI tables, `aqi.Schemas`, pinned by AqiPipelineSpec).
     */
   def readOrEmpty(spark: SparkSession, dir: String, table: String, schema: StructType): DataFrame =
-    if (exists(spark, dir, table)) spark.read.parquet(path(dir, table))
+    if (exists(spark, dir, table)) spark.read.schema(schema).parquet(path(dir, table))
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Dynamic-partition overwrite: replaces ONLY the partitions present

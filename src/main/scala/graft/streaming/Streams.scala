@@ -173,7 +173,11 @@ object Streams {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val target = Warehouse.readOrEmpty(spark, warehouseDir, table, schema)
+        // the stored table also holds the merge's audit columns, which the
+        // stream's schema lacks: infer it, and use the stream's only when empty
+        val target =
+          if (Warehouse.exists(spark, warehouseDir, table)) Warehouse.read(spark, warehouseDir, table)
+          else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         val merged = graft.operators.Merge.scd1(
           target, batch, spec, current_timestamp())
         Warehouse.overwrite(merged, warehouseDir, table)

@@ -563,20 +563,28 @@ class StreamsSpec extends AnyFunSuite with SparkTest {
     val input = MemoryStream[(Long, String)]
     val stream = input.toDF().toDF("k", "v")
     val q = Streams.upsertStream(stream, wh, "t",
-      graft.operators.MergeSpec(Seq("k"), Seq("v")), cp,
+      graft.operators.MergeSpec(Seq("k"), Seq("v"),
+        createdCol = Some("created_date_nds"), updatedCol = Some("last_updated_nds")), cp,
       org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    // k -> (v, created_date_nds): the stream's schema lacks the audit
+    // columns, so the table must be read with its stored schema
+    def rows() = graft.sources.Warehouse.read(s, wh, "t")
+      .select("k", "v", "created_date_nds").collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getTimestamp(2))).toMap
     try {
       input.addData((1L, "a"), (2L, "b"))
       q.processAllAvailable()
-      val first = graft.sources.Warehouse.read(s, wh, "t").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(first == Map(1L -> "a", 2L -> "b"))
+      val first = rows()
+      assert(first.map { case (k, (v, _)) => k -> v } == Map(1L -> "a", 2L -> "b"))
+      assert(first.values.forall(_._2 != null))
 
       input.addData((2L, "B"), (3L, "c")) // update + insert
       q.processAllAvailable()
-      val second = graft.sources.Warehouse.read(s, wh, "t").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(second == Map(1L -> "a", 2L -> "B", 3L -> "c"))
+      val second = rows()
+      assert(second.map { case (k, (v, _)) => k -> v } == Map(1L -> "a", 2L -> "B", 3L -> "c"))
+      // keys 1 (untouched) and 2 (updated) keep their first-batch stamp
+      assert(second(1L)._2 == first(1L)._2 && second(2L)._2 == first(2L)._2)
+      assert(second(3L)._2 != null)
     } finally q.stop()
   }
 

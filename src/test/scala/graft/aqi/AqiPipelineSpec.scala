@@ -3,7 +3,9 @@ package graft.aqi
 import java.nio.file.{Files, Path}
 import java.time.Instant
 
+import org.apache.spark.graft.Jobs
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTest
@@ -273,4 +275,25 @@ class AqiPipelineSpec extends AnyFunSuite with SparkTest {
       assert(retried == uninterrupted._1)
       assert(retried(2).exists(_.contains("site-aa")) && retried(2).exists(_.contains(",99,")))
     }
+
+  test("every pipeline table's declared schema is its stored schema") {
+    // the run reads these tables with the declared schema; a column that
+    // drifts from what the writer stores would read as NULL, not fail
+    val wh = day1._2.toString
+    def columns(t: StructType) = t.fields.map(f => (f.name, f.dataType)).toSeq
+    for ((table, declared) <- Seq(
+        Pipeline.StateAqiStage -> Schemas.stateAqiStage,
+        Pipeline.UsCountiesStage -> Schemas.usCountiesStage,
+        Pipeline.StateNdsT -> Schemas.stateNds,
+        Pipeline.CountyNdsT -> Schemas.countyNds,
+        Pipeline.MeasurementNdsT -> Schemas.measurementNds,
+        Watermarks.TableName -> Schemas.metadata))
+      assert(columns(Warehouse.read(spark, wh, table).schema) == columns(declared), table)
+  }
+
+  test("a day-2 run takes 37 Spark jobs") {
+    val wh = day1Copy()
+    val (_, jobs) = Jobs.count(spark.sparkContext)(Pipeline.run(spark, day1._1, wh, day2))
+    assert(jobs == 37)
+  }
 }
