@@ -123,7 +123,7 @@ object Bench {
     soloT >= 0 && soloT > prevT * 1.3 * math.max(controlRatio, 1.0)
 
   /** Startup wipe of every `stage_*` materialized-view table and every
-    * `ivf*` persisted ANN index under `target/graft_wh` — a bench run
+    * `ivf*` persisted ANN index under [[SparkEntry.Artifacts.root]] — a bench run
     * may NEVER inherit a derived artifact from a previous run. The
     * first gate that needs a stage rebuilds it (in the untimed warmup
     * pass), and the derivation cost itself is carried by the timed
@@ -135,7 +135,7 @@ object Bench {
     * building an input fixture is setup, not the timed operator.
     */
   private def wipeDerivedArtifacts(): Unit = {
-    val root = new java.io.File("target/graft_wh")
+    val root = new java.io.File(SparkEntry.Artifacts.root)
     val subs = Option(root.listFiles()).getOrElse(Array.empty)
     for (sf <- subs if sf.isDirectory;
          t <- Option(sf.listFiles()).getOrElse(Array.empty)

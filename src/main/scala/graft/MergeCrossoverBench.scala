@@ -80,8 +80,7 @@ object MergeCrossoverBench {
       partSec: Double, partRows: Long,
       pMinorSec: Double, pMinorRows: Long)
 
-  private def workDir(): String = java.nio.file.Files.createDirectories(
-    java.nio.file.Paths.get("target/graft_wh/merge5m").toAbsolutePath).toString
+  private def workDir(): String = SparkEntry.Artifacts.dir("merge5m")
 
   // both scenarios' merges: one key, one value column, a fixed clock
   private val spec = MergeSpec(Seq("o_orderkey"), Seq("o_totalprice"))
